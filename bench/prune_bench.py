@@ -60,6 +60,7 @@ def main() -> None:
     )
     from varint_rvv_spark.operators.footer_stats import footer_percentile
     from varint_rvv_spark.plans.session import get_spark
+    from varint_rvv_spark.sources.tables import ROWGROUP_BYTES
 
     # 480k full-body pages decoded across 32 tasks outgrow the 8g
     # default heap (single-JVM local mode carries every "executor")
@@ -81,13 +82,13 @@ def main() -> None:
         # bench params and reused across runs (the encode side is
         # excluded from timing anyway).
         if not Path(f"{out}/_SUCCESS").exists():
-            # 16 MB row groups (write_encoded's default): chunk_id IN
+            # 16 MB row groups (what write_encoded writes): chunk_id IN
             # pruning skips at row-group granularity, and the default
             # 128 MB blocks pack ~100 chunks per group on few-partition
             # range/zorder stores — a 7-chunk read then drags in whole
             # groups (measured 2.3 s vs 0.6 s)
             chunks.sortWithinPartitions("chunk_id") \
-                .write.option("parquet.block.size", str(16 << 20)) \
+                .write.option("parquet.block.size", str(ROWGROUP_BYTES)) \
                 .mode("overwrite").parquet(out)
         return spark.read.parquet(out)
 

@@ -1,7 +1,8 @@
-"""Sinks (chunks+footer tables), scan-mode encode, and the
+"""Sinks (the one-table chunk store), scan-mode encode, and the
 spark-submit job's resume semantics (SURVEY.md §5 item 4 resume test)."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -14,6 +15,7 @@ from varint_rvv_spark.sources.pages import pages_df
 from varint_rvv_spark.sources.tables import (
     read_chunks,
     read_footer,
+    resume_footer,
     write_encoded,
 )
 
@@ -57,12 +59,52 @@ def test_write_read_encoded(spark, pages, tmp_path):
     assert lang_only.select("column").distinct().collect()[0][0] == "lang"
     n, bad = verify_roundtrip(back)
     assert bad == 0
+    # one table: the footer is the chunks table without payloads
+    assert os.path.isdir(f"{root}/chunks")
+    assert not os.path.exists(f"{root}/footer")
     footer = read_footer(spark, root)
-    assert "payload" not in footer.columns
-    assert footer.count() == chunks.count()
+    assert not {"payload", "validity"} & set(footer.columns)
+    assert footer.count() == back.count() == chunks.count()
     # footer ledger totals match
     agg = footer.agg(F.sum("n_values")).collect()[0][0]
     assert agg == 600 * 5
+
+
+def test_write_encoded_reads_input_once(spark, tmp_path):
+    """write_encoded runs the encode lineage once: every input row
+    passes an identity mapInArrow in front of the encode exactly once."""
+    src = str(tmp_path / "src.parquet")
+    pages_df(spark, 1000, seed=5, partitions=2) \
+        .write.mode("overwrite").parquet(src)
+    df = spark.read.parquet(src)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(b.num_rows)
+            yield b
+
+    tapped = df.mapInArrow(count_rows, df.schema)
+    write_encoded(encode_chunks_scan(tapped, rows_per_chunk=128),
+                  str(tmp_path / "enc"), mode="overwrite")
+    assert seen.value == 1000
+
+
+def test_resume_footer_missing_vs_corrupt_store(spark, tmp_path):
+    """A store that does not exist, or holds no chunk files, is a fresh
+    start (None); a corrupt one raises instead of silently restarting
+    (which would re-encode and append every chunk a second time)."""
+    assert resume_footer(spark, str(tmp_path / "absent")) is None
+    empty = str(tmp_path / "empty")
+    write_encoded(encode_chunks_scan(spark.range(0).selectExpr(
+        "cast(id as string) s")), empty, mode="overwrite")
+    assert resume_footer(spark, empty) is None
+    root = tmp_path / "corrupt"
+    part = root / "chunks" / "column=a"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        resume_footer(spark, str(root))
 
 
 def test_encode_job_cli_with_resume(tmp_path):
@@ -110,19 +152,15 @@ def test_scan_resume_fingerprint_guard(spark, pages, tmp_path):
                            done_footer=footer).count()
 
 
-def test_resume_footer_survives_missing_footer_table(spark, pages,
-                                                     tmp_path):
-    """Crash window: chunks written, footer job never ran — resume must
-    still skip the written chunks (ledger derived from chunks dir)."""
-    from varint_rvv_spark.sources.tables import rebuild_footer, resume_footer
-
+def test_resume_reads_chunks_table(spark, pages, tmp_path):
+    """Resume derives its ledger from the chunks table alone and skips
+    every written chunk."""
     root = str(tmp_path / "enc")
     src = str(tmp_path / "src2.parquet")
     pages.write.mode("overwrite").parquet(src)  # file-backed: the
     # layout fingerprint refuses footer resume of in-memory inputs
     df = spark.read.parquet(src)
     chunks = encode_chunks_scan(df, rows_per_chunk=256)
-    # simulate the crash: persist chunks only, no footer table
     chunks.write.mode("overwrite").partitionBy("column") \
         .parquet(f"{root}/chunks")
     ledger = resume_footer(spark, root)
@@ -134,9 +172,6 @@ def test_resume_footer_survives_missing_footer_table(spark, pages,
     with pytest.raises(ValueError, match="not file-backed"):
         encode_chunks_scan(pages, rows_per_chunk=256,
                            done_footer=ledger).count()
-    # the repair path rebuilds the footer table from chunks
-    rebuild_footer(spark, root)
-    assert read_footer(spark, root).count() == ledger.count()
 
 
 def test_hash_resume_across_different_split_layout(spark, pages,

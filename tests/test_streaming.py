@@ -1,6 +1,8 @@
 """Structured Streaming incremental-encode test: two file drops, one
 checkpoint — second run encodes only the new files, chunks verify."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from varint_rvv_spark.operators.decode import verify_roundtrip
@@ -34,6 +36,8 @@ def test_stream_encode_incremental(spark, tmp_path):
     # epoch-namespaced chunk ids never collide
     assert allc.select("chunk_id", "column").distinct().count() == \
         allc.count()
+    # one table per store: no second footer table is written
+    assert not os.path.exists(f"{out}/footer")
 
 
 def test_streaming_stateful_dedup(spark, tmp_path):

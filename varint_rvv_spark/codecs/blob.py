@@ -30,7 +30,7 @@ import numpy as np
 HEADER = struct.Struct("<BBQ")
 HEADER_LEN = HEADER.size  # 10
 
-# --- codec ids (stable on disk; recorded in the footer table) ---
+# --- codec ids (stable on disk; recorded in each chunk's footer row) ---
 RAW = 0
 VARINT = 1
 DELTA_VARINT = 2

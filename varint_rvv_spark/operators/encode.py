@@ -7,7 +7,8 @@ Spark-first design (SURVEY.md §3.2 trace):
             never shuffle or encode]
          → repartition(chunk_id) → sortWithinPartitions(chunk_id, key)
          → mapInArrow(encode kernel)  ← the only Python stage
-         → chunks/footer sink
+         → chunks sink (one table; the footer is its payload-free
+            projection, footer_of)
 
 chunk_id is a *data-deterministic* column (`pmod(xxhash64(keys), N)`),
 not a task artifact, so re-runs assign identical chunks regardless of

@@ -1,60 +1,39 @@
-"""Format-abstraction layer for encoded-chunk + footer tables.
+"""Encoded-chunk store: one parquet table per store root.
 
-North_rule storage target is Iceberg; this sandbox has no Iceberg jars
-(verified: pyspark/jars carries none), so the layer writes the same
-logical schema either way (SURVEY.md §1.2):
-
-* Iceberg path (`catalog_table=...`): `df.writeTo(table).append()` /
-  partitioned `createOrReplace` — used when the session is configured
-  with a `spark.sql.catalog.*` Iceberg catalog.
-* Parquet path (default): directory layout `<root>/chunks` +
-  `<root>/footer`, zstd parquet, chunk table partitioned by `column`
-  so single-column decodes prune at the scan.
-
-The footer doubles as the checkpoint ledger: `resume_footer` loads it
-(empty → None) and encode passes it to skip finished chunks.
+Layout: `<root>/chunks`, zstd parquet partitioned by `column` so
+single-column decodes prune at the scan (SURVEY.md §1.2).  The footer
+is not a second table: it is the chunks table read without `payload`
+and `validity` (`footer_of`), whose bytes parquet column pruning skips.
+The same projection is the checkpoint ledger: `resume_footer` loads it
+(no chunk files yet → None) and encode passes it to skip finished chunks.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.encode import footer_of
 
-
-def _use_iceberg(spark: SparkSession, catalog_table: str | None) -> bool:
-    if not catalog_table:
-        return False
-    cat = catalog_table.split(".")[0]
-    return spark.conf.get(f"spark.sql.catalog.{cat}", None) is not None
+# Parquet row-group cap for the chunks table (parquet's default is
+# 128 MB): the pruned read path pushes a `chunk_id IN (...)` scan
+# filter, and parquet skips at ROW-GROUP granularity — with default
+# blocks a range/zorder store written from few partitions packs ~100
+# chunks per row group, so a 7-chunk point read drags in whole 128 MB
+# row groups (measured 2.3 s vs 0.6 s on an equivalent store with
+# chunk-sized groups; BENCH/PRUNING.md).  Row groups a small multiple
+# of the chunk payload keep skipped chunks actually unread.
+ROWGROUP_BYTES = 16 << 20
 
 
 def write_encoded(chunks: DataFrame, root: str,
-                  catalog_table: str | None = None,
-                  mode: str = "append",
-                  rowgroup_bytes: int = 16 << 20) -> None:
-    """Persist chunks + footer (Iceberg when configured, else parquet).
-
-    `rowgroup_bytes` caps the chunks table's parquet row-group size
-    (default 16 MB vs parquet's 128 MB): the pruned read path pushes
-    a `chunk_id IN (...)` scan filter, and parquet skips at ROW-GROUP
-    granularity — with default blocks a range/zorder store written
-    from few partitions packs ~100 chunks per row group, so a
-    7-chunk point read drags in whole 128 MB row groups (measured
-    2.3 s vs 0.6 s on an equivalent store with chunk-sized groups;
-    BENCH/PRUNING.md).  Row groups a small multiple of the chunk
-    payload keep skipped chunks actually unread."""
-    spark = chunks.sparkSession
-    footer = footer_of(chunks)
-    if _use_iceberg(spark, catalog_table):  # pragma: no cover - no jars here
-        chunks.writeTo(f"{catalog_table}_chunks").append()
-        footer.writeTo(f"{catalog_table}_footer").append()
-        return
+                  mode: str = "append") -> None:
+    """Persist chunks as one column-partitioned parquet write: the
+    input's encode lineage runs once."""
     (chunks.write.mode(mode)
-     .option("parquet.block.size", str(int(rowgroup_bytes)))
+     .option("parquet.block.size", str(ROWGROUP_BYTES))
      .partitionBy("column")
      .parquet(f"{root}/chunks"))
-    footer.write.mode(mode).parquet(f"{root}/footer")
 
 
 def read_chunks(spark: SparkSession, root: str,
@@ -66,32 +45,21 @@ def read_chunks(spark: SparkSession, root: str,
 
 
 def read_footer(spark: SparkSession, root: str) -> DataFrame:
-    return spark.read.parquet(f"{root}/footer")
+    return footer_of(read_chunks(spark, root))
 
 
 def resume_footer(spark: SparkSession, root: str) -> DataFrame | None:
     """Ledger of already-written chunks, or None for a fresh start.
 
-    Derived from the *chunks* table (payload column pruned at the
-    parquet scan), not the footer table: write_encoded persists chunks
-    and footer as two jobs, so a crash in between leaves chunks with no
-    footer rows.  The chunks dir is what decode will actually read —
-    resuming against it can neither re-encode an already-written chunk
-    (duplicate rows) nor skip a chunk that was never written.  Falls
-    back to the footer table only if the chunks dir is unreadable.
+    Only a store with no chunk files is a fresh start: one that does
+    not exist yet, or one whose writes held no rows (parquet then
+    leaves no data file to infer a schema from).  Any other read error
+    (a corrupt or unreadable file) propagates: treating it as a fresh
+    start would re-encode every chunk and append duplicates.
     """
     try:
-        return (read_chunks(spark, root)
-                .drop("payload", "validity"))
-    except Exception:
-        try:
-            return read_footer(spark, root)
-        except Exception:
+        return read_footer(spark, root)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None
-
-
-def rebuild_footer(spark: SparkSession, root: str) -> None:
-    """Re-derive the footer table from the chunks dir (repairs the
-    orphaned-chunks window after a crash between the two writes)."""
-    (read_chunks(spark, root).drop("payload", "validity")
-     .write.mode("overwrite").parquet(f"{root}/footer"))
+        raise

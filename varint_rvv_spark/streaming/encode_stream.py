@@ -2,7 +2,7 @@
 
 The batch engine's encode is a pure function of its input batch, so the
 streaming form is `readStream → foreachBatch(encode → append)` with the
-stream checkpoint *plus* the footer ledger giving exactly-once chunk
+stream checkpoint *plus* the chunks table giving exactly-once chunk
 accounting:
 
 * Spark's checkpointLocation dedupes input batches (source offsets);
@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.encode import encode_chunks_scan, footer_of
+from ..operators.encode import encode_chunks_scan
 
 
 def stream_encode_parquet_dir(spark: SparkSession, input_dir: str,
@@ -27,8 +27,9 @@ def stream_encode_parquet_dir(spark: SparkSession, input_dir: str,
     """Incrementally encode new parquet files landing in input_dir.
 
     Returns the started StreamingQuery.  Chunk ids are namespaced by
-    micro-batch epoch so appends never collide; the footer ledger under
-    ``<output_root>/footer`` stays the resume/metrics source of truth.
+    micro-batch epoch so appends never collide; the chunks table under
+    ``<output_root>/chunks`` is the one resume/metrics source of truth
+    (its footer is that table without payloads, ``footer_of``).
     """
     src = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", "64")
@@ -47,8 +48,6 @@ def stream_encode_parquet_dir(spark: SparkSession, input_dir: str,
             F.col("chunk_id") + F.lit(int(epoch_id) << 40))
         (chunks.write.mode("overwrite").partitionBy("column")
          .parquet(f"{output_root}/chunks/epoch={int(epoch_id)}"))
-        footer_of(chunks).write.mode("overwrite") \
-            .parquet(f"{output_root}/footer/epoch={int(epoch_id)}")
 
     writer = (src.writeStream.foreachBatch(sink)
               .option("checkpointLocation", checkpoint))
