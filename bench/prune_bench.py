@@ -49,7 +49,6 @@ def main() -> None:
 
     from varint_rvv_spark.operators.decode import (
         decode_table,
-        prune_chunks_eq,
         prune_chunks_multi,
         push_chunk_filter,
     )
@@ -130,7 +129,7 @@ def main() -> None:
     ch1 = materialize(encode_chunks(pages, key_cols=["url"],
                                     num_chunks=N_CHUNKS), "ch1")
     add("bloom point lookup (url = <one page>), full bodies",
-        ch1, prune_chunks_eq(ch1, "url", target),
+        ch1, prune_chunks_multi(ch1, eq={"url": target}),
         PCOLS, PSCHEMA, lambda d: d.filter(F.col("url") == target))
 
     # 2. dvset equality on a range-clustered categorical
@@ -139,7 +138,7 @@ def main() -> None:
                                           rows_per_chunk=ROWS_PER), "ch2")
     lang = pages.agg(F.min("lang")).collect()[0][0]
     add(f"dvset equality (lang = '{lang}', clustered), full bodies",
-        ch2, prune_chunks_eq(ch2, "lang", lang),
+        ch2, prune_chunks_multi(ch2, eq={"lang": lang}),
         PCOLS, PSCHEMA, lambda d: d.filter(F.col("lang") == lang))
 
     # 3. Z-order 2-D box on pages (crawl-time x document length)
@@ -155,7 +154,6 @@ def main() -> None:
     t_hi = int(mm[0] + (mm[1] - mm[0]) * 0.1)  # first 10% of the crawl
     len_lo = int(mm[2])                        # longest-decile docs
     # one footer pass for both box predicates (the scan_encoded path)
-    # instead of two chained prune_chunks metadata rounds
     pr3 = prune_chunks_multi(ch3, ranges={"ts_us": (t_lo, t_hi),
                                           "text_len": (len_lo, None)})
     add("z-order 2-D box (first 10% of crawl x longest decile), bodies",

@@ -50,14 +50,14 @@ def test_compact_single_bin_when_target_huge(spark):
 def test_compact_fresh_footer_stats(spark):
     """Re-encoded chunks get fresh zone maps / eq stats, so pruning
     works on the compacted set."""
-    from varint_rvv_spark.operators.decode import prune_chunks
+    from varint_rvv_spark.operators.decode import prune_chunks_multi
 
     df = spark.read.parquet(EVENTS).orderBy("ts")
     small = encode_chunks_scan(df, rows_per_chunk=32).cache()
     compacted = compact_chunks(small, target_bytes=8 << 10).cache()
     total = compacted.select("chunk_id").distinct().count()
     lo, hi = 1704844800000000, 1705449600000000
-    kept = (prune_chunks(compacted, "ts", lo, hi)
+    kept = (prune_chunks_multi(compacted, ranges={"ts": (lo, hi)})
             .select("chunk_id").distinct().count())
     assert 0 < kept < total
     small.unpersist()

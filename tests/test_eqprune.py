@@ -4,7 +4,10 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from varint_rvv_spark.operators.decode import decode_table, prune_chunks_eq
+from varint_rvv_spark.operators.decode import (
+    decode_table,
+    prune_chunks_multi,
+)
 from varint_rvv_spark.operators.eqstats import (
     BLOOM_MAX_DISTINCT,
     bloom_may_contain,
@@ -51,7 +54,7 @@ def test_prune_chunks_eq_source_clustered(spark):
     chunks = encode_chunks_range(df, ["source"], num_partitions=4,
                                  rows_per_chunk=32).cache()
     total = chunks.select("chunk_id").distinct().count()
-    pruned = prune_chunks_eq(chunks, "source", "src7")
+    pruned = prune_chunks_multi(chunks, eq={"source": "src7"})
     kept = pruned.select("chunk_id").distinct().count()
     assert 0 < kept <= max(total // 4, 2)  # actually selective
 
@@ -64,7 +67,7 @@ def test_prune_chunks_eq_source_clustered(spark):
 
     assert agg(pruned) == agg(chunks)
     # a column that opted out of eq stats (long text) is kept whole
-    unpruned = prune_chunks_eq(chunks, "text", "nosuchvalue")
+    unpruned = prune_chunks_multi(chunks, eq={"text": "nosuchvalue"})
     assert unpruned.select("chunk_id").distinct().count() == total
     chunks.unpersist()
 
@@ -82,7 +85,7 @@ def test_prune_chunks_eq_bloom_point_lookup(spark):
     targets = [r.fp for r in
                df.orderBy("doc_id").select("fp").limit(5).collect()]
     for t in targets:
-        pruned = prune_chunks_eq(chunks, "fp", t)
+        pruned = prune_chunks_multi(chunks, eq={"fp": t})
         d = decode_table(pruned, ["doc_id", "fp"],
                          "doc_id long, fp string", contiguous=True)
         hits = d.filter(F.col("fp") == t).count()
@@ -99,9 +102,9 @@ def test_prune_chunks_eq_guards(spark):
                                          partitions=2)).cache()
     try:
         with pytest.raises(ValueError, match="no footer rows"):
-            prune_chunks_eq(chunks, "no_such_col", "x")
+            prune_chunks_multi(chunks, eq={"no_such_col": "x"})
         with pytest.raises(ValueError, match="NULL"):
-            prune_chunks_eq(chunks, "url", None)
+            prune_chunks_multi(chunks, eq={"url": None})
     finally:
         chunks.unpersist()
 
@@ -151,7 +154,7 @@ def test_prune_chunks_eq_int_point_lookup(spark):
                            columns=["doc_id", "lang"]).cache()
     total = chunks.select("chunk_id").distinct().count()
     for target in [0, 7, 499]:
-        pruned = prune_chunks_eq(chunks, "doc_id", target)
+        pruned = prune_chunks_multi(chunks, eq={"doc_id": target})
         d = decode_table(pruned, ["doc_id", "lang"],
                          "doc_id long, lang string", contiguous=True)
         assert d.filter(F.col("doc_id") == target).count() == 1
@@ -160,7 +163,8 @@ def test_prune_chunks_eq_int_point_lookup(spark):
 
 
 def test_prune_chunks_in_list(spark):
-    from varint_rvv_spark.operators.decode import prune_chunks_in
+    """A list-valued eq predicate is an IN-list: OR of the probes."""
+    from varint_rvv_spark.operators.decode import MAX_IN_PROBES
     from varint_rvv_spark.operators.encode import encode_chunks
 
     df = spark.read.parquet(DOCS)
@@ -168,16 +172,18 @@ def test_prune_chunks_in_list(spark):
                            columns=["doc_id", "source"]).cache()
     total = chunks.select("chunk_id").distinct().count()
     targets = [3, 141, 421]
-    pruned = prune_chunks_in(chunks, "doc_id", targets)
+    pruned = prune_chunks_multi(chunks, eq={"doc_id": targets})
     d = decode_table(pruned, ["doc_id", "source"],
                      "doc_id long, source string", contiguous=True)
     assert d.filter(F.col("doc_id").isin(targets)).count() == len(targets)
     assert pruned.select("chunk_id").distinct().count() < total
     # over the probe cap: conservatively keeps everything
-    wide = prune_chunks_in(chunks, "doc_id", list(range(100)))
+    wide = prune_chunks_multi(
+        chunks, eq={"doc_id": list(range(MAX_IN_PROBES + 1))})
+    assert wide is chunks  # no footer work at all
     assert wide.select("chunk_id").distinct().count() == total
     with pytest.raises(ValueError, match="empty probe list"):
-        prune_chunks_in(chunks, "doc_id", [])
+        prune_chunks_multi(chunks, eq={"doc_id": []})
     chunks.unpersist()
 
 
@@ -185,7 +191,6 @@ def test_zorder_two_dimension_pruning(spark):
     """Z-order clustering keeps BOTH dimensions' zone maps selective:
     a 2-D box predicate prunes strictly better than half the chunks,
     and drops none that matter (answer equals the unpruned decode)."""
-    from varint_rvv_spark.operators.decode import prune_chunks
     from varint_rvv_spark.operators.encode import encode_chunks_zorder
 
     df = (spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -197,9 +202,8 @@ def test_zorder_two_dimension_pruning(spark):
                                   rows_per_chunk=64).cache()
     total = chunks.select("chunk_id").distinct().count()
     lo, hi = 1704844800000000, 1705449600000000
-    pruned = prune_chunks(
-        prune_chunks(chunks, "user_id", 10, 19),
-        "ts_us", lo, hi - 1)
+    pruned = prune_chunks_multi(chunks, ranges={
+        "user_id": (10, 19), "ts_us": (lo, hi - 1)})
     kept = pruned.select("chunk_id").distinct().count()
     assert kept < total / 2, (kept, total)
 
@@ -219,7 +223,6 @@ def test_zorder_two_dimension_pruning(spark):
 def test_prune_probe_type_mismatch_raises(spark):
     """An int probe on a string column tests the wrong hash family and
     would silently drop matching chunks — must raise instead."""
-    from varint_rvv_spark.operators.decode import prune_chunks_in
     from varint_rvv_spark.operators.encode import encode_chunks
 
     df = spark.read.parquet(DOCS)
@@ -227,11 +230,11 @@ def test_prune_probe_type_mismatch_raises(spark):
                            columns=["doc_id", "source"]).cache()
     try:
         with pytest.raises(TypeError, match="integer probe"):
-            prune_chunks_eq(chunks, "source", 123)
+            prune_chunks_multi(chunks, eq={"source": 123})
         with pytest.raises(TypeError, match="probe against non-varlen"):
-            prune_chunks_eq(chunks, "doc_id", "123")
+            prune_chunks_multi(chunks, eq={"doc_id": "123"})
         with pytest.raises(TypeError, match="integer probe"):
-            prune_chunks_in(chunks, "source", ["src1", 7])
+            prune_chunks_multi(chunks, eq={"source": ["src1", 7]})
     finally:
         chunks.unpersist()
 
@@ -266,6 +269,11 @@ def test_scan_encoded_combined_predicates(spark):
                                            .cast("timestamp")) < hi))
                 .agg(F.count("*"), F.sum("event_id")).collect()[0])
     assert got == exp and got[0] > 0
+    # a list value is an IN-list for the prune and the residual filter
+    kinds = ["click", "error"]
+    d = scan_encoded(chunks, df.columns, TABLE_SCHEMAS["events"],
+                     eq={"event_type": kinds})
+    assert d.count() == df.filter(F.col("event_type").isin(kinds)).count()
     # predicates on undecoded columns must raise, not silently skip
     # the residual
     with pytest.raises(ValueError, match="predicate columns"):
@@ -320,7 +328,7 @@ def test_push_chunk_filter_pushes_to_scan(spark, tmp_path):
         .sortWithinPartitions("chunk_id").write.parquet(out)
     stored = spark.read.parquet(out)
     target = df.agg(F.max("fp")).collect()[0][0]
-    pruned = prune_chunks_eq(stored, "fp", target)
+    pruned = prune_chunks_multi(stored, eq={"fp": target})
     pushed = push_chunk_filter(stored, pruned)
     plan = pushed._jdf.queryExecution().executedPlan().toString()
     # one id collapses In(...) to EqualTo(...) — either way the id
@@ -335,32 +343,74 @@ def test_push_chunk_filter_pushes_to_scan(spark, tmp_path):
                pruned.select("chunk_id").distinct().collect())
 
 
-def test_prune_chunks_multi_equals_sequential(spark):
-    """Single-pass multi-predicate prune keeps exactly the chunks the
-    chained per-predicate operators keep."""
-    from varint_rvv_spark.operators.decode import (
-        prune_chunks,
-        prune_chunks_multi,
-    )
+def _footer_may_match(stats: dict, eq: list, rng: tuple | None) -> bool:
+    """Driver-side twin of prune_chunks_multi's condition on one
+    footer row: zone-map overlap AND any IN-probe may be present."""
+    from varint_rvv_spark.operators.eqstats import int_bloom_positions
+
+    if rng is not None:
+        lo, hi = rng
+        if stats.get("vmax") is not None and stats["vmax"] < lo:
+            return False
+        if stats.get("vmin") is not None and stats["vmin"] > hi:
+            return False
+
+    def may_contain(v):
+        if isinstance(v, int):
+            if "dvset_i" in stats:
+                return v in stats["dvset_i"]
+            if "bloom" in stats:
+                bm = bytes.fromhex(stats["bloom"])
+                return all(bm[p >> 3] & (1 << (p & 7)) for p in
+                           int_bloom_positions(v, stats["bloom_m"]))
+            return True
+        if "dvset" in stats:
+            return v in stats["dvset"]
+        if "bloom" in stats:
+            return bloom_may_contain(stats["bloom"], stats["bloom_m"],
+                                     v.encode())
+        return True
+
+    return not eq or any(may_contain(v) for v in eq)
+
+
+def test_prune_chunks_multi_equals_footer_reference(spark):
+    """The kept chunk ids equal a driver-side evaluation of the same
+    footer rows; a chunk with no row for a predicate column is kept."""
+    import json
+
     from varint_rvv_spark.operators.encode import encode_chunks_range
 
     df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    chunks = encode_chunks_range(df, ["event_type", "ts"],
-                                 num_partitions=4,
-                                 rows_per_chunk=64).cache()
-    lo, hi = 1704844800000000, 1705449600000000
-    seq = prune_chunks(
-        prune_chunks_eq(chunks, "event_type", "click"),
-        "event_id", 100, 5000)
-    multi = prune_chunks_multi(chunks,
-                               eq={"event_type": "click"},
-                               ranges={"event_id": (100, 5000)})
+    encoded = encode_chunks_range(df, ["event_type", "ts"],
+                                  num_partitions=4, rows_per_chunk=64)
+    # an extra chunk holding only a non-predicate column
+    top = encoded.agg(F.max("chunk_id")).collect()[0][0]
+    orphan = (encoded.filter((F.col("chunk_id") == top)
+                             & (F.col("column") == "value"))
+              .withColumn("chunk_id", F.lit(top + 1)))
+    chunks = encoded.unionByName(orphan).cache()
+    eq = {"event_type": "click", "user_id": [3, 17, 40]}
+    ranges = {"event_id": (100, 5000)}
+    multi = prune_chunks_multi(chunks, eq=eq, ranges=ranges)
 
     def ids(ch):
         return sorted(r.chunk_id for r in
                       ch.select("chunk_id").distinct().collect())
 
-    assert ids(multi) == ids(seq)
+    rows = chunks.select("chunk_id", "column", "stats_json").collect()
+    dropped = set()
+    for r in rows:
+        if r.column not in eq and r.column not in ranges:
+            continue
+        probes = eq.get(r.column, [])
+        probes = probes if isinstance(probes, list) else [probes]
+        if not _footer_may_match(json.loads(r.stats_json or "{}"),
+                                 probes, ranges.get(r.column)):
+            dropped.add(r.chunk_id)
+    expected = sorted({r.chunk_id for r in rows} - dropped)
+    assert ids(multi) == expected
+    assert top + 1 in expected and dropped  # kept orphan; real pruning
     with pytest.raises(ValueError, match="no footer rows"):
         prune_chunks_multi(chunks, eq={"nope": "x"})
     with pytest.raises(TypeError, match="integer probe"):

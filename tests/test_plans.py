@@ -125,16 +125,21 @@ def test_embeddings_roundtrip_has_exactly_one_shuffle(spark):
 
 
 def test_eq_prune_qualifier_join_is_broadcast(spark, pages):
-    """prune_chunks_eq: the qualifying-chunk semi-join must broadcast
-    the (tiny) footer-derived id set, never shuffle the chunk rows."""
-    from varint_rvv_spark.operators.decode import prune_chunks_eq
+    """prune_chunks_multi: the pruned-chunk anti-join must broadcast
+    the (tiny) footer-derived id set, never shuffle or aggregate the
+    chunk rows — for one predicate and for several."""
+    from varint_rvv_spark.operators.decode import prune_chunks_multi
 
     chunks = encode_chunks_scan(pages).cache()
     try:
-        plan = plan_of(prune_chunks_eq(chunks, "lang", "en"))
-        assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-        # the only exchange is the broadcast itself
-        assert plan.count("Exchange") == plan.count("BroadcastExchange")
+        for kw in ({"eq": {"lang": "en"}},
+                   {"eq": {"lang": "en"},
+                    "ranges": {"warc_ts": (0, None)}}):
+            plan = plan_of(prune_chunks_multi(chunks, **kw))
+            assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+            # the only exchange is the broadcast itself
+            assert plan.count("Exchange") == \
+                plan.count("BroadcastExchange"), (kw, plan)
     finally:
         chunks.unpersist()
 

@@ -107,6 +107,22 @@ def test_resume_footer_missing_vs_corrupt_store(spark, tmp_path):
         resume_footer(spark, str(root))
 
 
+def test_empty_store_reads_as_empty_table(spark, tmp_path):
+    """A store whose only write held no rows (just `_SUCCESS` on disk)
+    reads as 0 chunks / footer rows / decoded rows, not an error."""
+    from varint_rvv_spark.operators.decode import decode_table
+
+    root = str(tmp_path / "empty")
+    write_encoded(encode_chunks_scan(spark.range(0)), root,
+                  mode="overwrite")
+    chunks = read_chunks(spark, root)
+    assert chunks.count() == 0
+    assert chunks.columns[-1] == "column"
+    assert read_footer(spark, root).count() == 0
+    assert decode_table(chunks, ["id"], "id long").count() == 0
+    assert read_chunks(spark, root, columns=["id"]).count() == 0
+
+
 def test_encode_job_cli_with_resume(tmp_path):
     out = str(tmp_path / "job_out")
     cmd = [sys.executable, "jobs/encode_job.py",

@@ -252,6 +252,19 @@ def test_wide_decimal_roundtrip(spark):
         "id bigint, d decimal(38,6)"
 
 
+def test_subset_schema_keeps_parameterised_types():
+    """Projecting a schema string splits on top-level commas only, so
+    decimal(p,s) / struct<...> / map<k,v> types survive intact."""
+    from varint_rvv_spark.queries import TABLE_SCHEMAS, _subset_schema
+
+    assert _subset_schema(TABLE_SCHEMAS["orders_dates"],
+                          ["o_key_dec", "o_orderkey"]) == \
+        "o_key_dec decimal(18,2), o_orderkey long"
+    assert _subset_schema("a struct<x:map<string,int>,y:int>, b int",
+                          ["b", "a"]) == \
+        "b int, a struct<x:map<string,int>,y:int>"
+
+
 def test_verify_chunks_mismatch_diagnostics(spark):
     """Forced corruption: hash mismatch surfaces concrete
     (index, expected, got) samples; truncation surfaces the decode
@@ -294,7 +307,7 @@ def test_verify_chunks_mismatch_diagnostics(spark):
 
 def test_prune_chunks_zone_map(spark):
     """Footer min/max pruning: fewer chunks decoded, same answer."""
-    from varint_rvv_spark.operators.decode import prune_chunks
+    from varint_rvv_spark.operators.decode import prune_chunks_multi
     from varint_rvv_spark.operators.encode import encode_chunks_scan
     from varint_rvv_spark.queries import TABLE_SCHEMAS
 
@@ -303,7 +316,7 @@ def test_prune_chunks_zone_map(spark):
           .orderBy("ts"))
     chunks = encode_chunks_scan(df, rows_per_chunk=128).cache()
     total = chunks.select("chunk_id").distinct().count()
-    pruned = prune_chunks(chunks, "ts", lo, hi)
+    pruned = prune_chunks_multi(chunks, ranges={"ts": (lo, hi)})
     kept = pruned.select("chunk_id").distinct().count()
     assert 0 < kept < total  # pruning actually pruned
 
@@ -317,7 +330,7 @@ def test_prune_chunks_zone_map(spark):
 
     assert tuple(agg(pruned)) == tuple(agg(chunks))
     # a column without zone maps (strings) is conservatively kept
-    unpruned = prune_chunks(chunks, "event_type", 0, 1)
+    unpruned = prune_chunks_multi(chunks, ranges={"event_type": (0, 1)})
     assert unpruned.select("chunk_id").distinct().count() == total
     chunks.unpersist()
 
@@ -372,7 +385,7 @@ def test_prune_chunks_unknown_column_raises(spark):
     (ADVICE round-2)."""
     import pytest
 
-    from varint_rvv_spark.operators.decode import prune_chunks
+    from varint_rvv_spark.operators.decode import prune_chunks_multi
     from varint_rvv_spark.operators.encode import encode_chunks_scan
     from varint_rvv_spark.sources.pages import pages_df
 
@@ -380,7 +393,7 @@ def test_prune_chunks_unknown_column_raises(spark):
                                          partitions=2)).cache()
     try:
         with pytest.raises(ValueError, match="no footer rows"):
-            prune_chunks(chunks, "wrac_ts", lo=0)
+            prune_chunks_multi(chunks, ranges={"wrac_ts": (0, None)})
     finally:
         chunks.unpersist()
 

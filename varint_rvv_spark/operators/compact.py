@@ -23,7 +23,7 @@ Plan shape (scale notes):
    concatenates, and re-encodes through the exact `_append_column_row`
    path the encode kernel uses — so compacted chunks are
    indistinguishable from freshly encoded ones (verify_chunks,
-   prune_chunks, footer aggregates all apply).
+   prune_chunks_multi, footer aggregates all apply).
 
 Compacted chunk ids are positional (bin index), so the output is NOT
 resumable — footer rows carry num_chunks=-1, which the resume guards

@@ -137,40 +137,11 @@ def verify_roundtrip(chunks: DataFrame) -> tuple[int, int]:
     return int(agg["n"]), int(agg["bad"] or 0)
 
 
-def prune_chunks(chunks: DataFrame, column: str,
-                 lo=None, hi=None) -> DataFrame:
-    """Zone-map chunk pruning — the engine twin of parquet row-group
-    statistics.
-
-    Keeps only the chunks whose encode-time [vmin, vmax] for `column`
-    can overlap [lo, hi]; all columns of a surviving chunk are kept
-    (whole-chunk granularity), everything else never reaches the
-    Python decode kernel.  The stats filter is pure JVM
-    (get_json_object on the footer stats); chunks without a zone map
-    (varlen/NaN columns) are conservatively kept, as is any chunk when
-    the stats parse to NULL.  A residual row filter after decode is
-    still required.  Comparisons are double-precision: exact for
-    |value| < 2^53 (epoch-µs timestamps included), conservative use
-    only beyond that.
-
-    At 100 TB this runs on the footer/chunks *scan* — with a
-    column-partitioned sink the stats column is a few bytes per chunk,
-    so pruning cost is O(chunks), not O(data).  Cache the chunks
-    DataFrame when it is a freshly-encoded lineage (the qualifying-id
-    branch would otherwise recompute the encode).
-    """
-    col_rows = chunks.filter(F.col("column") == column)
-    if col_rows.isEmpty():
-        # a typo'd / varlen-only column name would otherwise produce an
-        # empty qualifying set and silently drop EVERY chunk
-        raise ValueError(
-            f"prune_chunks: no footer rows for column {column!r} — "
-            f"check the column name (pruning on it would drop all "
-            f"chunks, not zero)")
-    # no .distinct(): a semi-join build side tolerates duplicate ids,
-    # and the dedup would add a pointless (if tiny) exchange
-    qual = col_rows.filter(_range_overlap(lo, hi)).select("chunk_id")
-    return chunks.join(F.broadcast(qual), "chunk_id", "left_semi")
+# IN-lists longer than this keep every chunk for their predicate: a
+# thousand-term OR of bloom bit tests would bloat codegen for marginal
+# selectivity (route huge id lists through a semi-join on the decoded
+# column instead)
+MAX_IN_PROBES = 64
 
 
 def _range_overlap(lo, hi):
@@ -187,20 +158,49 @@ def _range_overlap(lo, hi):
 
 def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
                        ranges: dict | None = None) -> DataFrame:
-    """All of scan_encoded's predicates in ONE footer pass.
+    """Footer-statistics chunk pruning — the engine twin of parquet
+    row-group statistics, for every predicate in one footer pass.
 
-    Chaining prune_chunks/prune_chunks_eq costs one footer scan + one
-    guard action + one broadcast per predicate; this evaluates every
-    predicate's condition on its own column's footer rows in a single
-    aggregation — a chunk qualifies when `min(ok)` over its predicate
-    rows is true (boolean min = AND; a chunk with no footer row for
-    some predicate column is conservatively kept, matching the
-    per-predicate operators).  One bounded driver action validates
-    column existence + probe types for all predicates together.
+    `eq`: {column: value} keeps chunks whose equality stats
+    (operators/eqstats.py) say they *may* contain `value`: ``dvset`` /
+    ``dvset_i`` → exact membership, else ``bloom`` → the BLOOM_K
+    double-hashed bit tests as pure JVM Column arithmetic over the hex
+    bitmap, else (long text, pre-eqstats footers) kept.  A list, tuple
+    or set value is an IN-list: a chunk may match when any probe may
+    (OR); an empty list raises, and one longer than MAX_IN_PROBES
+    keeps every chunk for that predicate without touching the footer.
+    `ranges`: {column: (lo, hi)} keeps chunks whose encode-time
+    [vmin, vmax] zone map can overlap the inclusive range (either
+    bound may be None; double-precision, exact for |value| < 2^53,
+    epoch-µs timestamps included); chunks without a zone map
+    (varlen/NaN columns) are kept.
+
+    A chunk is dropped only when some predicate's condition is false
+    on that chunk's footer row for the predicate column: the result is
+    `chunks` left-anti-joined with the broadcast ids of those rows, so
+    a chunk with no footer row for a predicate column is always kept,
+    no aggregation runs, and the broadcast is the plan's only exchange
+    (the streamed side keeps its partition order, so contiguous decode
+    stays valid).  All columns of a surviving chunk are kept (whole-
+    chunk granularity); a residual row filter after decode is still
+    required.  One bounded driver action checks that every predicate
+    column has footer rows (a typo would otherwise keep or drop
+    everything silently) and that each probe matches its column's
+    type.  Cost is O(chunks) footer metadata, not O(data); cache a
+    freshly-encoded lineage first (the id branch would otherwise
+    recompute the encode).
     """
-    eq = eq or {}
+    probes = {}
+    for col, v in (eq or {}).items():
+        vals = list(v) if isinstance(v, (list, tuple, set)) else [v]
+        if not vals:
+            raise ValueError(f"prune_chunks_multi: empty probe list for "
+                             f"{col!r} (did you mean to prune "
+                             f"everything?)")
+        if len(vals) <= MAX_IN_PROBES:
+            probes[col] = vals
     ranges = ranges or {}
-    cols = list(eq) + [c for c in ranges if c not in eq]
+    cols = list(probes) + [c for c in ranges if c not in probes]
     if not cols:
         return chunks
     heads = {r.column: int(r.dt) for r in
@@ -212,97 +212,27 @@ def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
         raise ValueError(
             f"prune_chunks_multi: no footer rows for columns "
             f"{missing} — check the column names")
-    for col, v in eq.items():
-        _check_probe_type(heads[col], v, col, "prune_chunks_multi")
     cond = None
     for col in cols:
         c = F.lit(True)
-        if col in eq:
-            c = c & _eq_may_contain(eq[col])
+        if col in probes:
+            for v in probes[col]:
+                _check_probe_type(heads[col], v, col)
+            hit = _eq_may_contain(probes[col][0])
+            for v in probes[col][1:]:
+                hit = hit | _eq_may_contain(v)
+            c = c & hit
         if col in ranges:
             c = c & _range_overlap(*ranges[col])
         cond = (F.when(F.col("column") == col, c) if cond is None
                 else cond.when(F.col("column") == col, c))
-    qual = (chunks.filter(F.col("column").isin(cols))
-            .withColumn("_ok", cond)
-            .groupBy("chunk_id")
-            .agg(F.min("_ok").alias("_all_ok"))
-            .filter(F.col("_all_ok"))
-            .select("chunk_id"))
-    return chunks.join(F.broadcast(qual), "chunk_id", "left_semi")
+    # a NULL condition is not false: the chunk is kept
+    drop = (chunks.filter(F.col("column").isin(cols))
+            .filter(~cond).select("chunk_id"))
+    return chunks.join(F.broadcast(drop), "chunk_id", "left_anti")
 
 
-def prune_chunks_eq(chunks: DataFrame, column: str, value) -> DataFrame:
-    """Equality chunk pruning on a string/binary/integer column.
-
-    For integers this complements the zone map: `prune_chunks(col, v,
-    v)` only helps when the table is clustered on the column, while
-    the eq stats (dvset_i / bloom over distinct values) prune id
-    point lookups on *any* layout.
-
-    Keeps only the chunks whose footer equality stats
-    (operators/eqstats.py) say the chunk *may* contain `value`:
-
-    * ``dvset`` present → exact membership (`array_contains` on the
-      parsed JSON list);
-    * else ``bloom`` present → the BLOOM_K double-hashed bit tests,
-      evaluated as pure JVM Column arithmetic over the hex bitmap
-      (substr → conv → bit extract) — the footer scan never crosses
-      into Python;
-    * else (long-text / high-cardinality columns, pre-eqstats
-      footers) → conservatively kept.
-
-    One-sided like all pruning here: a chunk containing `value` always
-    survives (bloom false positives only cost a decode); a residual
-    row filter after decode is still required.  At 100 TB this is an
-    O(chunks) footer-metadata scan, same cost shape as prune_chunks.
-    """
-    col_rows, dt = _eq_col_rows(chunks, column, "prune_chunks_eq")
-    _check_probe_type(dt, value, column, "prune_chunks_eq")
-    qual = (col_rows.filter(_eq_may_contain(value))
-            .select("chunk_id"))
-    return chunks.join(F.broadcast(qual), "chunk_id", "left_semi")
-
-
-def prune_chunks_in(chunks: DataFrame, column: str, values,
-                    max_probes: int = 64) -> DataFrame:
-    """IN-list chunk pruning: keep chunks that may contain *any* of
-    `values` (OR of the prune_chunks_eq conditions).  Probe lists
-    longer than `max_probes` skip pruning entirely (conservatively
-    keeping every chunk) — a thousand-term OR of bit tests would bloat
-    codegen for marginal selectivity; route huge id lists through a
-    semi-join on the decoded column instead."""
-    vals = list(values)
-    if not vals:
-        raise ValueError("prune_chunks_in: empty probe list (did you "
-                         "mean to prune everything?)")
-    if len(vals) > max_probes:
-        # bail before touching the footer — validating the column
-        # name would cost a full lineage job on a path that prunes
-        # nothing anyway
-        return chunks
-    col_rows, dt = _eq_col_rows(chunks, column, "prune_chunks_in")
-    for v in vals:
-        _check_probe_type(dt, v, column, "prune_chunks_in")
-    cond = _eq_may_contain(vals[0])
-    for v in vals[1:]:
-        cond = cond | _eq_may_contain(v)
-    qual = col_rows.filter(cond).select("chunk_id")
-    return chunks.join(F.broadcast(qual), "chunk_id", "left_semi")
-
-
-def _eq_col_rows(chunks: DataFrame, column: str, who: str):
-    col_rows = chunks.filter(F.col("column") == column)
-    head = col_rows.select("dtype_code").head()
-    if head is None:
-        raise ValueError(
-            f"{who}: no footer rows for column {column!r} — check the "
-            f"column name (pruning on it would drop all chunks, not "
-            f"zero)")
-    return col_rows, int(head.dtype_code)
-
-
-def _check_probe_type(dt: int, value, column: str, who: str) -> None:
+def _check_probe_type(dt: int, value, column: str) -> None:
     """An int probe against a string column (or vice versa) would test
     the wrong hash family and silently prune chunks that DO contain
     the value (the residual Spark filter would have cast-matched it) —
@@ -310,14 +240,14 @@ def _check_probe_type(dt: int, value, column: str, who: str) -> None:
     is_int_col = dt in (B.DT_U32, B.DT_U64, B.DT_I32, B.DT_I64, B.DT_U8)
     if isinstance(value, int) and not is_int_col:
         raise TypeError(
-            f"{who}: integer probe against non-integer column "
-            f"{column!r} (dtype_code {dt}) — pass the column's own "
-            f"type (pruning with a mismatched probe type would drop "
-            f"matching chunks)")
+            f"prune_chunks_multi: integer probe against non-integer "
+            f"column {column!r} (dtype_code {dt}) — pass the column's "
+            f"own type (pruning with a mismatched probe type would "
+            f"drop matching chunks)")
     if isinstance(value, (str, bytes, bytearray)) and not B.is_varlen(dt):
         raise TypeError(
-            f"{who}: string/bytes probe against non-varlen column "
-            f"{column!r} (dtype_code {dt}) — pass an int probe")
+            f"prune_chunks_multi: string/bytes probe against non-varlen "
+            f"column {column!r} (dtype_code {dt}) — pass an int probe")
 
 
 def _eq_may_contain(value):
@@ -532,7 +462,7 @@ def push_chunk_filter(chunks: DataFrame, pruned: DataFrame,
                       max_ids: int = 256) -> DataFrame:
     """Convert a pruned chunk set into a *scan-pushable* id predicate.
 
-    The semi-join that prune_chunks* builds cannot reach the file
+    The anti-join that prune_chunks_multi builds cannot reach the file
     scan: Spark reads every chunk's payload bytes and only then drops
     the non-qualifying rows — fine for saved decode, wrong for saved
     I/O.  When pruning was selective (≤ max_ids surviving chunks, the
@@ -559,14 +489,15 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
     """One-call filtered scan over an encoded store: the predicate
     surface a reader actually wants.
 
-    `eq`: {column: value} equality predicates; `ranges`:
-    {column: (lo, hi)} inclusive numeric ranges (either bound may be
-    None; timestamps compare in epoch-µs).  Each predicate first
-    prunes whole chunks from footer stats (prune_chunks_eq / the
-    zone maps — O(chunks) JVM metadata work), then re-applies itself
-    as an exact residual row filter on the decoded survivors, so the
-    result equals a plain decode-then-filter regardless of how
-    selective the footer stats were.
+    `eq`: {column: value} equality predicates (a list, tuple or set
+    value is an IN-list); `ranges`: {column: (lo, hi)} inclusive
+    numeric ranges (either bound may be None; timestamps compare in
+    epoch-µs).  Each predicate first prunes whole chunks from footer
+    stats (prune_chunks_multi: eq stats and zone maps — O(chunks) JVM
+    metadata work), then re-applies itself as an exact residual row
+    filter on the decoded survivors, so the result equals a plain
+    decode-then-filter regardless of how selective the footer stats
+    were.
 
     Predicate columns must be in `columns` (the residual filter needs
     them decoded) — raises otherwise.
@@ -584,8 +515,6 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
                          f"{sorted(missing)} must be in `columns` "
                          f"(the residual filter needs them decoded)")
     base = chunks
-    # one footer pass for every predicate together (vs one scan +
-    # guard + broadcast per predicate when chaining the operators)
     chunks = prune_chunks_multi(chunks, eq=eq, ranges=ranges)
     if (eq or ranges) and pushdown_ids:
         # selective prunes become a scan-pushed IN filter: parquet
@@ -604,7 +533,9 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
         return F.col(col)
 
     for col, v in eq.items():
-        d = d.filter(F.col(col) == F.lit(v))
+        d = d.filter(F.col(col).isin(list(v))
+                     if isinstance(v, (list, tuple, set))
+                     else F.col(col) == F.lit(v))
     for col, (lo, hi) in ranges.items():
         if lo is not None:
             d = d.filter(as_num(col) >= F.lit(lo))

@@ -105,7 +105,7 @@ def _append_column_row(rows: dict, chunk_id: int, col: str, arr,
             out_stats["head"] = [cast(x) for x in values[:10]]
             out_stats["tail"] = [cast(x) for x in values[-10:]]
             # zone map: chunk min/max drives decode-time chunk pruning
-            # (operators/decode.prune_chunks) — the engine twin of
+            # (operators/decode.prune_chunks_multi) — the engine twin of
             # parquet row-group statistics
             if kind == "f" and not np.isfinite(values).all():
                 pass  # NaN poisons min/max ordering; no zone map
@@ -308,7 +308,7 @@ def encode_chunks_range(df: DataFrame, range_cols: list[str],
 
     repartitionByRange(range_cols) + sortWithinPartitions gives chunks
     *disjoint* value ranges on the clustering columns — which is what
-    makes the footer zone maps (vmin/vmax → decode.prune_chunks)
+    makes the footer zone maps (vmin/vmax → decode.prune_chunks_multi)
     actually selective, and what delta codecs love (sorted ts → 1-byte
     deltas).  Costs one range shuffle.  Chunk ids are positional AND
     depend on repartitionByRange's sampled boundaries, so range-mode
@@ -488,8 +488,9 @@ def encode_chunks_zorder(df: DataFrame, zcols: list[str],
     interleaves the bits of several numeric dimensions (each
     equal-width-bucketed to 2^bits buckets over its [min, max]) into a
     Morton value and range-clusters on THAT, so every z-column's
-    per-chunk vmin/vmax stays tight and `prune_chunks` composes across
-    dimensions (the Databricks Z-ORDER / Hilbert-lite recipe).
+    per-chunk vmin/vmax stays tight and `prune_chunks_multi` range
+    predicates compose across dimensions (the Databricks Z-ORDER /
+    Hilbert-lite recipe).
 
     The only driver action is one bounded min/max agg over the
     z-columns (2 values per dimension).  Equal-width bucketing is the

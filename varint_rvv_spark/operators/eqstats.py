@@ -1,7 +1,7 @@
 """Per-chunk equality statistics: distinct-value sets + bloom filters.
 
 The categorical twin of the numeric zone maps (operators/encode.py
-vmin/vmax → decode.prune_chunks): for string/binary columns an
+vmin/vmax → decode.prune_chunks_multi): for string/binary columns an
 equality predicate (`url = ...`, `lang = 'de'`) can skip whole chunks
 before any payload reaches the Python decode kernel — the engine twin
 of parquet column-index / bloom-filter pruning, extending the
@@ -32,8 +32,8 @@ At 100 TB the bloom adds ≤ ~2·8·n_distinct bits ≈ 2 bytes/distinct
 value of footer per column — O(chunks) metadata, read by the pruning
 scan only, never shipped to the decode kernel.
 
-JVM-side probe: `prune_chunks_eq` (operators/decode.py) evaluates the
-k bit tests with pure Column arithmetic (substr/conv on the hex
+JVM-side probe: `prune_chunks_multi` (operators/decode.py) evaluates
+the k bit tests with pure Column arithmetic (substr/conv on the hex
 bitmap) — the footer scan never leaves the JVM.
 """
 
@@ -191,6 +191,6 @@ def build_eq_stats_numeric(values: "np.ndarray") -> dict:
 
 def bloom_may_contain(bloom_hex: str, m: int, value: bytes) -> bool:
     """Python-side membership check (tests + kernel-side use); the
-    JVM Column twin lives in decode.prune_chunks_eq."""
+    JVM Column twin is decode._eq_may_contain (prune_chunks_multi)."""
     bm = bytes.fromhex(bloom_hex)
     return all(bm[p >> 3] & (1 << (p & 7)) for p in bloom_positions(value, m))

@@ -82,11 +82,12 @@ def bucket_expr(col: str, edges: list, sub: int) -> Column:
     coarse bucket holds ≤ ~1/64 of the rows by construction (rank
     edges), so no downstream window partition exceeds that bound even
     when a heavy tail collapses every sub-bucket; near-uniform data
-    additionally spreads ~1/(64·sub) per bucket.  A NULL value lands
-    in bucket 0 (the when/otherwise fallbacks all produce 0 for NULL
-    comparisons) — callers MUST guard NULLs upstream (ordered_cumsum
-    raises; footer samples are never NULL); do not rely on NULL
-    propagating through the bucket id."""
+    additionally spreads ~1/(64·sub) per bucket.  A NULL value does
+    not propagate: its coarse level is 0 (the when/otherwise fallback),
+    but `F.least` skips the NULL equal-width position, so it lands in
+    sub-bucket sub-1 of coarse bucket 0 (bucket 0 only when that range
+    has zero width) — callers MUST guard NULLs upstream
+    (ordered_cumsum raises; footer samples are never NULL)."""
     v = F.col(col).cast("double")
     if len(edges) < 2:
         return F.lit(0)

@@ -14,6 +14,8 @@ raw table directly — equality proves bit-exact reconstruction.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.decode import decode_table
@@ -43,7 +45,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _subset_schema(schema: str, cols: list[str]) -> str:
     """Project a 'name type, ...' schema string to `cols`, in order."""
     types = {}
-    for part in schema.split(","):
+    # top-level commas only: a comma whose next bracket is a closing
+    # one sits inside decimal(p,s) / struct<...> / map<k,v>
+    for part in re.split(r",(?![^<(]*[>)])", schema):
         name, _, typ = part.strip().partition(" ")
         types[name] = typ
     return ", ".join(f"{c} {types[c]}" for c in cols)
@@ -143,7 +147,7 @@ def rt_events_pruned(spark, sf_dir):
     encode), footer min/max pruning to one week, decode only the
     surviving chunks, residual row filter, aggregate.  Equality with
     the plain-WHERE oracle proves pruning drops no needed chunk."""
-    from .operators.decode import prune_chunks
+    from .operators.decode import prune_chunks_multi
     from .operators.encode import encode_chunks_range
 
     lo_us = 1704844800000000  # 2024-01-10 00:00 UTC
@@ -151,7 +155,7 @@ def rt_events_pruned(spark, sf_dir):
     df = _t(spark, sf_dir, "events")
     chunks = encode_chunks_range(df, ["ts"], num_partitions=8,
                                  rows_per_chunk=1024).cache()
-    pruned = prune_chunks(chunks, "ts", lo_us, hi_us)
+    pruned = prune_chunks_multi(chunks, ranges={"ts": (lo_us, hi_us)})
     d = decode_table(pruned, df.columns, TABLE_SCHEMAS["events"],
                      contiguous=True)
     d = d.filter((F.unix_micros("ts") >= lo_us)
@@ -175,11 +179,11 @@ WHERE epoch_us(ts) >= 1704844800000000
 
 def rt_events_zorder_pruned(spark, sf_dir):
     """Z-order-clustered round-trip: events Morton-clustered on
-    (user_id, ts), so BOTH dimensions' zone maps stay tight and
-    prune_chunks composes across them (encode_chunks_zorder) — the
+    (user_id, ts), so BOTH dimensions' zone maps stay tight and one
+    prune over both ranges composes them (encode_chunks_zorder) — the
     multi-dimension pruning mode single-column range clustering
     cannot give.  Oracle is the plain two-predicate WHERE."""
-    from .operators.decode import prune_chunks
+    from .operators.decode import prune_chunks_multi
     from .operators.encode import encode_chunks_zorder
 
     lo_us, hi_us = 1704844800000000, 1705449600000000
@@ -190,8 +194,8 @@ def rt_events_zorder_pruned(spark, sf_dir):
     chunks = encode_chunks_zorder(df, ["user_id", "ts_us"],
                                   num_partitions=8,
                                   rows_per_chunk=512).cache()
-    pruned = prune_chunks(chunks, "user_id", 10, 19)
-    pruned = prune_chunks(pruned, "ts_us", lo_us, hi_us - 1)
+    pruned = prune_chunks_multi(chunks, ranges={
+        "user_id": (10, 19), "ts_us": (lo_us, hi_us - 1)})
     d = decode_table(pruned, df.columns,
                      "event_id long, user_id long, ts_us long, "
                      "value double", contiguous=True)
@@ -302,13 +306,13 @@ def rt_documents_source_pruned(spark, sf_dir):
     pruning on source='src7' (operators/eqstats.py), decode only the
     surviving chunks, residual row filter, aggregate.  Equality with
     the plain-WHERE oracle proves pruning drops no needed chunk."""
-    from .operators.decode import prune_chunks_eq
+    from .operators.decode import prune_chunks_multi
     from .operators.encode import encode_chunks_range
 
     df = _t(spark, sf_dir, "documents")
     chunks = encode_chunks_range(df, ["source"], num_partitions=8,
                                  rows_per_chunk=512).cache()
-    pruned = prune_chunks_eq(chunks, "source", "src7")
+    pruned = prune_chunks_multi(chunks, eq={"source": "src7"})
     d = decode_table(pruned, df.columns, TABLE_SCHEMAS["documents"],
                      contiguous=True)
     return (d.filter(F.col("source") == "src7")
@@ -331,7 +335,7 @@ def rt_documents_point_lookup(spark, sf_dir):
     footer bloom (eqstats.py) prunes the scan to ~1 chunk (plus ~2 %
     false positives) before any payload reaches the decode kernel —
     the 'find this exact document at 100 TB' shape."""
-    from .operators.decode import prune_chunks_eq
+    from .operators.decode import prune_chunks_multi
     from .operators.encode import encode_chunks
 
     df = _t(spark, sf_dir, "documents").withColumn("fp", F.md5("text"))
@@ -340,7 +344,7 @@ def rt_documents_point_lookup(spark, sf_dir):
     target = df.agg(F.max("fp")).collect()[0][0]
     n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "8")), 8)
     chunks = encode_chunks(df, key_cols=["doc_id"], num_chunks=n).cache()
-    pruned = prune_chunks_eq(chunks, "fp", target)
+    pruned = prune_chunks_multi(chunks, eq={"fp": target})
     d = decode_table(pruned, df.columns,
                      TABLE_SCHEMAS["documents"] + ", fp string",
                      contiguous=True)
@@ -842,7 +846,7 @@ def rt_orders_in_list(spark, sf_dir):
     the integer eq blooms (operators/eqstats.py) prune chunks the
     zone map cannot touch (ids span every chunk), with the OR-of-
     probes condition evaluated on footer metadata only."""
-    from .operators.decode import prune_chunks_in
+    from .operators.decode import prune_chunks_multi
     from .operators.encode import encode_chunks
 
     df = _t(spark, sf_dir, "orders").select(
@@ -854,7 +858,7 @@ def rt_orders_in_list(spark, sf_dir):
     n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "8")), 8)
     chunks = encode_chunks(df, key_cols=["o_orderkey"],
                            num_chunks=n).cache()
-    pruned = prune_chunks_in(chunks, "o_orderkey", keys)
+    pruned = prune_chunks_multi(chunks, eq={"o_orderkey": keys})
     d = decode_table(pruned, df.columns,
                      "o_orderkey long, o_orderstatus string, "
                      "o_totalprice double", contiguous=True)
