@@ -206,17 +206,11 @@ def bench_ops(spark) -> dict:
         F.count(F.lit(1)).alias("n")).head()
 
     def pruned():
-        # pushdown_ids=None: the 256-id IN pushdown is a POINT-read
-        # optimization (it costs a driver round-trip to collect the
-        # surviving ids); at ~90% selectivity it skips nothing, and
-        # its fixed latency would turn this scaling row into a
-        # turnaround measurement.  Zone-map pruning itself stays
-        # in-plan via prune_chunks_multi.
         d = scan_encoded(
             chunks, ["url", "warc_ts", "html", "text", "lang"],
             "url string, warc_ts timestamp, html binary, "
             "text string, lang string",
-            ranges={"warc_ts": (lo, hi)}, pushdown_ids=None)
+            ranges={"warc_ts": (lo, hi)})
         return d.agg(F.count(F.lit(1))).head()[0]
 
     n_sel = pruned()  # warm

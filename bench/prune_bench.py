@@ -71,9 +71,7 @@ def main() -> None:
 
     def materialize(chunks, name):
         """Chunk sets live in a parquet store in real deployments —
-        time the decode from disk, not from an in-memory cache (Arrow
-        string vectors in the block cache also cannot serve the
-        prune join's row accessors)."""
+        time the decode from disk, not from an in-memory cache."""
         out = f"/tmp/vrs_prune_{name}_{N_PAGES}_{N_CHUNKS}"
         # sorted by chunk_id inside each file: parquet row groups stay
         # id-clustered, so a pushed chunk_id IN (...) filter skips
@@ -266,11 +264,12 @@ def main() -> None:
         "100 TB is a job-killer rather than a 0.6 s constant.",
         "",
         "Selective prunes are re-pushed as a `chunk_id IN (...)` scan "
-        "filter (decode.push_chunk_filter), so parquet row-group "
-        "statistics skip the payload *bytes*, not just the decode — "
-        "without it the semi-join form reads every byte and only "
-        "saves kernel time (measured 2.0x -> 2.9x on the point "
-        "lookup).",
+        "filter (decode.push_chunk_filter; scan_encoded builds the "
+        "same filter from its driver-side verdicts), so parquet "
+        "row-group statistics skip the payload *bytes*, not just the "
+        "decode — without it the pruned frame's `NOT IN` id filter "
+        "reads every byte and only saves kernel time (measured 2.0x "
+        "-> 2.9x on the point lookup).",
         "",
         "Measured speedup = full / (kept-bytes + fixed job "
         "overhead): the pruned side pays a ~0.5-0.8 s floor of "
@@ -278,7 +277,7 @@ def main() -> None:
         "decodes, so the measured column approaches the ideal "
         "(total/kept) column only as the store grows.  The ideal "
         "column is the 100 TB-relevant number: pruning cost is "
-        "O(chunks) footer metadata + a bounded id collect, while "
+        "O(chunks) footer rows collected once, while "
         "the avoided work is O(data) I/O + decode.",
     ]
     Path(f"{REPO}/BENCH/PRUNING.md").write_text("\n".join(lines) + "\n")

@@ -417,3 +417,73 @@ def test_prune_chunks_multi_equals_footer_reference(spark):
         prune_chunks_multi(chunks, eq={"event_type": 3})
     assert prune_chunks_multi(chunks) is chunks  # no predicates
     chunks.unpersist()
+
+
+def test_pruning_runs_one_job(spark, tmp_path):
+    """Over a parquet store, prune_chunks_multi and scan_encoded each
+    run exactly one Spark job (the footer projection) before the frame
+    they return is executed."""
+    from varint_rvv_spark.operators.decode import scan_encoded
+    from varint_rvv_spark.operators.encode import encode_chunks
+    from varint_rvv_spark.sources.tables import read_chunks, write_encoded
+
+    df = spark.read.parquet(DOCS)
+    root = str(tmp_path / "store")
+    write_encoded(encode_chunks(df, key_cols=["doc_id"], num_chunks=8,
+                                columns=["doc_id", "source"]), root)
+    chunks = read_chunks(spark, root)
+    sc = spark.sparkContext
+    calls = {
+        "prune": lambda: prune_chunks_multi(
+            chunks, eq={"doc_id": [3, 141]}, ranges={"doc_id": (0, 400)}),
+        "scan": lambda: scan_encoded(
+            chunks, ["doc_id", "source"], "doc_id long, source string",
+            eq={"doc_id": 7}),
+    }
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"prune-jobs-{name}", name)
+            call()
+            jobs = sc.statusTracker().getJobIdsForGroup(
+                f"prune-jobs-{name}")
+            assert len(jobs) == 1, (name, jobs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    d = calls["scan"]()
+    assert [tuple(r) for r in d.collect()] == \
+        [tuple(r) for r in df.filter(F.col("doc_id") == 7)
+         .select("doc_id", "source").collect()]
+
+
+def test_zone_map_compares_exactly(spark):
+    """Zone maps compare as exact integers: 2**53 and 2**53 + 1 are
+    the same double but different int64 values."""
+    from varint_rvv_spark.operators.encode import encode_chunks_scan
+
+    def kept(vmax):
+        chunks = encode_chunks_scan(spark.createDataFrame(
+            [(0,), (vmax,)], "v long").coalesce(1))
+        pruned = prune_chunks_multi(chunks,
+                                    ranges={"v": (2**53 + 1, None)})
+        return pruned.select("chunk_id").distinct().count()
+
+    assert kept(2**53) == 0
+    assert kept(2**53 + 1) == 1
+
+
+def test_scan_encoded_no_chunk_may_match(spark):
+    """A probe every chunk's exact stats rule out reads no chunk and
+    returns no rows, with the declared schema."""
+    from varint_rvv_spark.operators.decode import scan_encoded
+    from varint_rvv_spark.operators.encode import encode_chunks_range
+
+    df = spark.read.parquet(DOCS)
+    chunks = encode_chunks_range(df, ["source"], num_partitions=2,
+                                 rows_per_chunk=64)
+    schema = "doc_id long, source string"
+    d = scan_encoded(chunks, ["doc_id", "source"], schema,
+                     eq={"source": "no such source"})
+    assert d.collect() == []
+    assert [(f.name, f.dataType) for f in d.schema] == \
+        [(f.name, f.dataType) for f in
+         spark.createDataFrame([], schema).schema]

@@ -124,24 +124,39 @@ def test_embeddings_roundtrip_has_exactly_one_shuffle(spark):
     assert plan_of(out).count("Exchange") == 1
 
 
-def test_eq_prune_qualifier_join_is_broadcast(spark, pages):
-    """prune_chunks_multi: the pruned-chunk anti-join must broadcast
-    the (tiny) footer-derived id set, never shuffle or aggregate the
-    chunk rows — for one predicate and for several."""
-    from varint_rvv_spark.operators.decode import prune_chunks_multi
+def test_prune_plan_has_no_join_or_exchange(spark, pages, tmp_path):
+    """prune_chunks_multi decides on the driver, so the pruned plan is
+    the chunk scan plus at most an id filter — no join, no exchange —
+    for one predicate and for several; scan_encoded's kept ids reach
+    the parquet scan as a pushed filter."""
+    import re
 
-    chunks = encode_chunks_scan(pages).cache()
+    from varint_rvv_spark.operators.decode import (
+        prune_chunks_multi,
+        scan_encoded,
+    )
+    from varint_rvv_spark.sources.tables import read_chunks, write_encoded
+
+    chunks = encode_chunks_scan(pages, rows_per_chunk=50).cache()
     try:
         for kw in ({"eq": {"lang": "en"}},
                    {"eq": {"lang": "en"},
-                    "ranges": {"warc_ts": (0, None)}}):
+                    "ranges": {"warc_ts": (0, None)}},
+                   {"eq": {"url": "no such url"}}):
             plan = plan_of(prune_chunks_multi(chunks, **kw))
-            assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-            # the only exchange is the broadcast itself
-            assert plan.count("Exchange") == \
-                plan.count("BroadcastExchange"), (kw, plan)
+            assert "Join" not in plan and "Exchange" not in plan, \
+                (kw, plan)
+        root = str(tmp_path / "enc")
+        write_encoded(chunks, root, mode="overwrite")
     finally:
         chunks.unpersist()
+    target = pages.agg(F.max("url")).collect()[0][0]
+    d = scan_encoded(read_chunks(spark, root), ["url", "lang"],
+                     "url string, lang string", eq={"url": target})
+    # one id collapses In(...) to EqualTo(...)
+    assert re.search(r"PushedFilters: \[[^\]]*(In|EqualTo)\(chunk_id",
+                     plan_of(d)), plan_of(d)
+    assert [r.url for r in d.collect()] == [target]
 
 
 def test_compact_assignment_join_is_broadcast(spark, pages):

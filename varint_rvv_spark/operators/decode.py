@@ -1,19 +1,24 @@
 """Decode pipeline: chunk blobs → columns, plus bit-identity verification.
 
-Decode is embarrassingly parallel (SURVEY.md §4 "complete-varint-only
-stride"): chunks are self-contained, so the plan is Scan → mapInArrow —
-zero shuffles.  Verification recomputes each chunk's content hash from
+Chunks are self-contained (SURVEY.md §4 "complete-varint-only
+stride"): verification, `decode_only` and the contiguous decode of a
+fresh encode lineage are Scan → mapInArrow, zero shuffles; rebuilding
+rows from a parquet store (default `decode_table`) groups by chunk_id,
+one shuffle.  Verification recomputes each chunk's content hash from
 the decoded values and compares with the footer's encode-time hash;
 `verify_roundtrip` reduces that to a single (total, mismatched) pair.
 """
 
 from __future__ import annotations
 
+import json
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs import blob as B
 from .arrow_bridge import values_sha256, values_to_arrow
+from .eqstats import bloom_hex_test, eq_hashes, int_hashes
 
 VERIFY_SCHEMA = ("chunk_id long, column string, n_values long, "
                  "decoded_sha256 string, expected_sha256 string, "
@@ -48,8 +53,6 @@ def _mismatch_samples(values, dt, stats: dict, n_expected: int) -> list:
 
 
 def _verify_kernel(batch_iter):
-    import json
-
     for batch in batch_iter:
         d = batch.to_pydict()
         out = {"chunk_id": d["chunk_id"], "column": d["column"],
@@ -137,23 +140,11 @@ def verify_roundtrip(chunks: DataFrame) -> tuple[int, int]:
     return int(agg["n"]), int(agg["bad"] or 0)
 
 
-# IN-lists longer than this keep every chunk for their predicate: a
-# thousand-term OR of bloom bit tests would bloat codegen for marginal
-# selectivity (route huge id lists through a semi-join on the decoded
-# column instead)
+# IN-lists longer than this keep every chunk for their predicate: each
+# probe is tested against every chunk's footer row on the driver, so a
+# thousand-term list buys marginal selectivity at O(chunks × probes)
+# (route huge id lists through a semi-join on the decoded column instead)
 MAX_IN_PROBES = 64
-
-
-def _range_overlap(lo, hi):
-    """Zone-map overlap Column over footer rows (NULL stats → kept)."""
-    vmin = F.get_json_object("stats_json", "$.vmin").cast("double")
-    vmax = F.get_json_object("stats_json", "$.vmax").cast("double")
-    overlap = F.lit(True)
-    if lo is not None:
-        overlap = overlap & (vmax.isNull() | (vmax >= F.lit(float(lo))))
-    if hi is not None:
-        overlap = overlap & (vmin.isNull() | (vmin <= F.lit(float(hi))))
-    return overlap
 
 
 def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
@@ -164,31 +155,43 @@ def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
     `eq`: {column: value} keeps chunks whose equality stats
     (operators/eqstats.py) say they *may* contain `value`: ``dvset`` /
     ``dvset_i`` → exact membership, else ``bloom`` → the BLOOM_K
-    double-hashed bit tests as pure JVM Column arithmetic over the hex
-    bitmap, else (long text, pre-eqstats footers) kept.  A list, tuple
-    or set value is an IN-list: a chunk may match when any probe may
-    (OR); an empty list raises, and one longer than MAX_IN_PROBES
-    keeps every chunk for that predicate without touching the footer.
-    `ranges`: {column: (lo, hi)} keeps chunks whose encode-time
-    [vmin, vmax] zone map can overlap the inclusive range (either
-    bound may be None; double-precision, exact for |value| < 2^53,
-    epoch-µs timestamps included); chunks without a zone map
-    (varlen/NaN columns) are kept.
+    double-hashed bit tests, else (long text, pre-eqstats footers)
+    kept.  A list, tuple or set value is an IN-list: a chunk may match
+    when any probe may (OR); an empty list raises, and one longer than
+    MAX_IN_PROBES keeps every chunk for that predicate without touching
+    the footer.  `ranges`: {column: (lo, hi)} keeps chunks whose
+    encode-time [vmin, vmax] zone map can overlap the inclusive range
+    (either bound may be None; compared exactly, epoch-µs timestamps
+    included); chunks without a zone map (varlen/NaN columns) are kept.
 
-    A chunk is dropped only when some predicate's condition is false
-    on that chunk's footer row for the predicate column: the result is
-    `chunks` left-anti-joined with the broadcast ids of those rows, so
-    a chunk with no footer row for a predicate column is always kept,
-    no aggregation runs, and the broadcast is the plan's only exchange
-    (the streamed side keeps its partition order, so contiguous decode
-    stays valid).  All columns of a surviving chunk are kept (whole-
-    chunk granularity); a residual row filter after decode is still
-    required.  One bounded driver action checks that every predicate
-    column has footer rows (a typo would otherwise keep or drop
-    everything silently) and that each probe matches its column's
-    type.  Cost is O(chunks) footer metadata, not O(data); cache a
-    freshly-encoded lineage first (the id branch would otherwise
-    recompute the encode).
+    A chunk is dropped only when some predicate is false on its
+    footer row for the predicate column (`_footer_verdicts`, one job),
+    so a chunk with no row for a predicate column is kept.  Returns
+    `chunks` itself when nothing is dropped, else `chunks` filtered by
+    `chunk_id NOT IN (dropped)`: no join, no exchange, partition order
+    kept (contiguous decode stays valid).  Surviving chunks keep all
+    columns; a residual row filter after decode is still required.
+    A predicate column without footer rows raises (a typo would keep
+    or drop everything silently), as does a probe of the wrong type.
+    Cache a freshly-encoded lineage first (the footer job would
+    otherwise run the encode).
+    """
+    verdicts = _footer_verdicts(chunks, eq, ranges)
+    if verdicts is None or not verdicts[1]:
+        return chunks
+    return chunks.filter(~F.col("chunk_id").isin(verdicts[1]))
+
+
+def _footer_verdicts(chunks: DataFrame, eq: dict | None,
+                     ranges: dict | None) -> tuple[list, list] | None:
+    """(kept_ids, dropped_ids) of the chunks with a footer row for a
+    predicate column, or None when no predicate needs the footer.
+
+    One job, a plain projection (no aggregation, shuffle or broadcast);
+    rows are judged on the driver, each probe hashed once.  Driver
+    bytes are O(chunks): the predicate columns' stats_json, ~1.3 kB
+    per chunk-column for a 313-row url bloom, at most ~32 kB (the hex
+    of a BLOOM_MAX_M bitmap).
     """
     probes = {}
     for col, v in (eq or {}).items():
@@ -202,34 +205,32 @@ def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
     ranges = ranges or {}
     cols = list(probes) + [c for c in ranges if c not in probes]
     if not cols:
-        return chunks
-    heads = {r.column: int(r.dt) for r in
-             chunks.filter(F.col("column").isin(cols))
-             .groupBy("column")
-             .agg(F.first("dtype_code").alias("dt")).collect()}
-    missing = [c for c in cols if c not in heads]
+        return None
+    rows = (chunks.filter(F.col("column").isin(cols))
+            .select("chunk_id", "column", "dtype_code", "stats_json")
+            .collect())
+    dtypes = {}
+    for r in rows:
+        dtypes.setdefault(r.column, int(r.dtype_code))
+    missing = [c for c in cols if c not in dtypes]
     if missing:
         raise ValueError(
             f"prune_chunks_multi: no footer rows for columns "
             f"{missing} — check the column names")
-    cond = None
-    for col in cols:
-        c = F.lit(True)
-        if col in probes:
-            for v in probes[col]:
-                _check_probe_type(heads[col], v, col)
-            hit = _eq_may_contain(probes[col][0])
-            for v in probes[col][1:]:
-                hit = hit | _eq_may_contain(v)
-            c = c & hit
-        if col in ranges:
-            c = c & _range_overlap(*ranges[col])
-        cond = (F.when(F.col("column") == col, c) if cond is None
-                else cond.when(F.col("column") == col, c))
-    # a NULL condition is not false: the chunk is kept
-    drop = (chunks.filter(F.col("column").isin(cols))
-            .filter(~cond).select("chunk_id"))
-    return chunks.join(F.broadcast(drop), "chunk_id", "left_anti")
+    tests = {}
+    for col, vals in probes.items():
+        for v in vals:
+            _check_probe_type(dtypes[col], v, col)
+        tests[col] = [_eq_probe(v) for v in vals]
+    kept, dropped = set(), set()
+    for r in rows:
+        stats = json.loads(r.stats_json or "{}")
+        ok = ((r.column not in tests
+               or any(_may_contain(stats, p) for p in tests[r.column]))
+              and (r.column not in ranges
+                   or _overlaps(stats, *ranges[r.column])))
+        (kept if ok else dropped).add(r.chunk_id)
+    return sorted(kept - dropped), sorted(dropped)
 
 
 def _check_probe_type(dt: int, value, column: str) -> None:
@@ -250,58 +251,43 @@ def _check_probe_type(dt: int, value, column: str) -> None:
             f"column {column!r} (dtype_code {dt}) — pass an int probe")
 
 
-def _eq_may_contain(value):
-    """Column predicate over footer rows: may this chunk contain
-    `value`?  Pure JVM (get_json_object / from_json / substr / conv);
-    chunks without eq stats evaluate True (conservatively kept)."""
-    from .eqstats import BLOOM_K, eq_hashes, int_hashes
-
+def _eq_probe(value) -> tuple:
+    """(exact-list stat key, member or None if no list can hold it,
+    bloom hashes (c1, c2)) of one eq probe."""
     if value is None:
         raise ValueError("eq pruning: probing for NULL is not "
                          "supported (validity lives outside eq stats)")
     if isinstance(value, bool):
         raise ValueError("eq pruning: probe booleans as ints (0/1)")
     if isinstance(value, int):
-        c1, c2 = int_hashes(value)
-        dv = F.from_json(F.get_json_object("stats_json", "$.dvset_i"),
-                         "array<bigint>")
-        # dvset_i is only written for int64-representable domains, so
-        # an out-of-range probe can simply never match it
-        in_dv = (F.array_contains(dv, F.lit(value).cast("bigint"))
-                 if -(1 << 63) <= value < (1 << 63) else F.lit(False))
-    else:
-        vb = (value.encode("utf-8") if isinstance(value, str)
-              else bytes(value))
-        try:
-            vs = vb.decode("utf-8")
-        except UnicodeDecodeError:
-            vs = None  # utf-8 columns (the only dvset writers) can't
-            #            hold a non-utf8 byte string
-        dv = F.from_json(F.get_json_object("stats_json", "$.dvset"),
-                         "array<string>")
-        in_dv = (F.array_contains(dv, vs) if vs is not None
-                 else F.lit(False))
-        c1, c2 = eq_hashes(vb)
-    bloom = F.get_json_object("stats_json", "$.bloom")
-    m = F.get_json_object("stats_json", "$.bloom_m").cast("long")
+        # dvset_i is only written for int64-representable domains
+        member = value if -(1 << 63) <= value < (1 << 63) else None
+        return "dvset_i", member, int_hashes(value)
+    vb = value.encode("utf-8") if isinstance(value, str) else bytes(value)
+    try:
+        member = vb.decode("utf-8")
+    except UnicodeDecodeError:
+        member = None  # utf-8 columns (the only dvset writers) can't
+        #                hold a non-utf8 byte string
+    return "dvset", member, eq_hashes(vb)
 
-    def bit_set(i: int):
-        # combined hash computed driver-side; cast defends against the
-        # literal being inferred 32-bit (ANSI mode would raise on *)
-        pos = F.lit(c1 + i * c2).cast("long") % m
-        hexpair = bloom.substr((F.floor(pos / 8) * 2 + 1).cast("int"),
-                               F.lit(2))
-        byte_val = F.conv(hexpair, 16, 10).cast("long")
-        # byte_val < 256 so the double-precision route is exact
-        return (F.floor(byte_val / F.pow(F.lit(2.0),
-                                         (pos % 8).cast("double")))
-                .cast("long") % 2) == 1
-    bloom_hit = bit_set(0)
-    for i in range(1, BLOOM_K):
-        bloom_hit = bloom_hit & bit_set(i)
-    return (F.when(dv.isNotNull(), in_dv)
-            .when(bloom.isNotNull() & m.isNotNull(), bloom_hit)
-            .otherwise(F.lit(True)))
+
+def _may_contain(stats: dict, probe: tuple) -> bool:
+    """May the chunk contain the probe?  No eq stats → kept."""
+    key, member, hashes = probe
+    if stats.get(key) is not None:
+        return member is not None and member in stats[key]
+    if stats.get("bloom") is not None and stats.get("bloom_m") is not None:
+        return bloom_hex_test(stats["bloom"], int(stats["bloom_m"]),
+                              *hashes)
+    return True
+
+
+def _overlaps(stats: dict, lo, hi) -> bool:
+    """Exact zone-map overlap with [lo, hi]; no zone map → kept."""
+    vmin, vmax = stats.get("vmin"), stats.get("vmax")
+    return ((lo is None or vmax is None or vmax >= lo)
+            and (hi is None or vmin is None or vmin <= hi))
 
 
 def decode_table(chunks: DataFrame, columns: list[str],
@@ -462,16 +448,16 @@ def push_chunk_filter(chunks: DataFrame, pruned: DataFrame,
                       max_ids: int = 256) -> DataFrame:
     """Convert a pruned chunk set into a *scan-pushable* id predicate.
 
-    The anti-join that prune_chunks_multi builds cannot reach the file
-    scan: Spark reads every chunk's payload bytes and only then drops
-    the non-qualifying rows — fine for saved decode, wrong for saved
-    I/O.  When pruning was selective (≤ max_ids surviving chunks, the
+    prune_chunks_multi's `NOT IN` cannot skip parquet row groups:
+    Spark reads every chunk's payload bytes and only then drops the
+    non-qualifying rows — fine for saved decode, wrong for saved I/O.
+    When pruning was selective (≤ max_ids surviving chunks, the
     point-lookup case), collecting the id list — bounded by
-    construction — and re-filtering the base scan with
+    construction, one more job — and re-filtering the base scan with
     `chunk_id IN (...)` gives parquet a PushedFilter, so row-group
     statistics skip the payload bytes on disk too (write stores
-    sorted by chunk_id to keep row groups id-clustered).  Falls back
-    to the semi-join form when more than max_ids chunks survive.
+    sorted by chunk_id to keep row groups id-clustered).  Returns
+    `pruned` when more than max_ids chunks survive.
     """
     ids = [r.chunk_id for r in
            pruned.select("chunk_id").distinct()
@@ -484,8 +470,7 @@ def push_chunk_filter(chunks: DataFrame, pruned: DataFrame,
 def scan_encoded(chunks: DataFrame, columns: list[str],
                  spark_schema: str, eq: dict | None = None,
                  ranges: dict | None = None,
-                 contiguous: bool = False,
-                 pushdown_ids: int | None = 256) -> DataFrame:
+                 contiguous: bool = False) -> DataFrame:
     """One-call filtered scan over an encoded store: the predicate
     surface a reader actually wants.
 
@@ -493,11 +478,13 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
     value is an IN-list); `ranges`: {column: (lo, hi)} inclusive
     numeric ranges (either bound may be None; timestamps compare in
     epoch-µs).  Each predicate first prunes whole chunks from footer
-    stats (prune_chunks_multi: eq stats and zone maps — O(chunks) JVM
-    metadata work), then re-applies itself as an exact residual row
-    filter on the decoded survivors, so the result equals a plain
-    decode-then-filter regardless of how selective the footer stats
-    were.
+    stats (prune_chunks_multi's verdicts, one footer job), then
+    re-applies itself as an exact residual row filter on the decoded
+    survivors, so the result equals a plain decode-then-filter.  When
+    a chunk is dropped, the kept ids filter the scan as a parquet-
+    pushed `chunk_id IN (...)`, so the dropped payload bytes are not
+    even read; a chunk with no row for a predicate column is not read
+    either (that column would decode as NULL, which nothing matches).
 
     Predicate columns must be in `columns` (the residual filter needs
     them decoded) — raises otherwise.
@@ -514,13 +501,9 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
         raise ValueError(f"scan_encoded: predicate columns "
                          f"{sorted(missing)} must be in `columns` "
                          f"(the residual filter needs them decoded)")
-    base = chunks
-    chunks = prune_chunks_multi(chunks, eq=eq, ranges=ranges)
-    if (eq or ranges) and pushdown_ids:
-        # selective prunes become a scan-pushed IN filter: parquet
-        # row-group stats then skip the payload *bytes*, not just the
-        # decode (see push_chunk_filter)
-        chunks = push_chunk_filter(base, chunks, max_ids=pushdown_ids)
+    verdicts = _footer_verdicts(chunks, eq, ranges)
+    if verdicts is not None and verdicts[1]:
+        chunks = chunks.filter(F.col("chunk_id").isin(verdicts[0]))
     d = decode_table(chunks, columns, spark_schema,
                      contiguous=contiguous)
 

@@ -13,7 +13,7 @@ Two footer stats, written at encode time per (chunk, column):
 * ``dvset`` — the exact distinct-value list, only when the chunk has
   at most ``DVSET_MAX_VALUES`` distinct utf-8 values totalling at most
   ``DVSET_MAX_BYTES`` (the lang/source/event_type shape).  Pruning on
-  it is exact: `array_contains` on the parsed JSON list.
+  it is exact: membership in the parsed JSON list.
 * ``bloom`` / ``bloom_m`` — a blake2b double-hashed bloom filter
   (k = BLOOM_K, m = ~8 bits per distinct value, power of two) over the
   chunk's distinct values, for high-cardinality columns (urls,
@@ -32,9 +32,10 @@ At 100 TB the bloom adds ≤ ~2·8·n_distinct bits ≈ 2 bytes/distinct
 value of footer per column — O(chunks) metadata, read by the pruning
 scan only, never shipped to the decode kernel.
 
-JVM-side probe: `prune_chunks_multi` (operators/decode.py) evaluates
-the k bit tests with pure Column arithmetic (substr/conv on the hex
-bitmap) — the footer scan never leaves the JVM.
+Probe side: `prune_chunks_multi` (operators/decode.py) collects the
+predicate columns' footer rows in one projection and tests each on the
+driver — dvset membership, or the k bloom bits (`bloom_hex_test`) with
+the probe hashed once per call, not once per chunk.
 """
 
 from __future__ import annotations
@@ -189,8 +190,20 @@ def build_eq_stats_numeric(values: "np.ndarray") -> dict:
     return {"bloom": bm.tobytes().hex(), "bloom_m": m}
 
 
+def bloom_hex_test(bloom_hex: str, m: int, c1: int, c2: int) -> bool:
+    """The BLOOM_K double-hashed bit tests of one probe, whose (c1, c2)
+    come from `eq_hashes` or `int_hashes`, against a hex bitmap; reads
+    only the k bytes it tests, never decodes the whole bitmap."""
+    for i in range(BLOOM_K):
+        p = (c1 + i * c2) % m
+        if not int(bloom_hex[(p >> 3) * 2:(p >> 3) * 2 + 2], 16) \
+                >> (p & 7) & 1:
+            return False
+    return True
+
+
 def bloom_may_contain(bloom_hex: str, m: int, value: bytes) -> bool:
-    """Python-side membership check (tests + kernel-side use); the
-    JVM Column twin is decode._eq_may_contain (prune_chunks_multi)."""
-    bm = bytes.fromhex(bloom_hex)
-    return all(bm[p >> 3] & (1 << (p & 7)) for p in bloom_positions(value, m))
+    """May a chunk whose bloom is `bloom_hex` contain byte string
+    `value`?  The same test prune_chunks_multi applies to each footer
+    row (through `bloom_hex_test`)."""
+    return bloom_hex_test(bloom_hex, m, *eq_hashes(value))
