@@ -419,20 +419,28 @@ def test_prune_chunks_multi_equals_footer_reference(spark):
     chunks.unpersist()
 
 
-def test_pruning_runs_one_job(spark, tmp_path):
-    """Over a parquet store, prune_chunks_multi and scan_encoded each
-    run exactly one Spark job (the footer projection) before the frame
-    they return is executed."""
-    from varint_rvv_spark.operators.decode import scan_encoded
+def _doc_store(spark, tmp_path) -> str:
     from varint_rvv_spark.operators.encode import encode_chunks
-    from varint_rvv_spark.sources.tables import read_chunks, write_encoded
+    from varint_rvv_spark.sources.tables import write_encoded
+
+    root = str(tmp_path / "store")
+    write_encoded(encode_chunks(spark.read.parquet(DOCS),
+                                key_cols=["doc_id"], num_chunks=8,
+                                columns=["doc_id", "source"]), root)
+    return root
+
+
+def test_pruning_runs_one_job(spark, tmp_path, count_jobs):
+    """Over a parquet store read through Spark, prune_chunks_multi and
+    scan_encoded each run exactly one Spark job (the footer projection)
+    before the frame they return is executed.  `.select("*")` derives
+    a frame, which takes the Spark path: the untransformed `read_chunks`
+    frame is judged on the driver (test_local_store_lookup_runs_no_job)."""
+    from varint_rvv_spark.operators.decode import scan_encoded
+    from varint_rvv_spark.sources.tables import read_chunks
 
     df = spark.read.parquet(DOCS)
-    root = str(tmp_path / "store")
-    write_encoded(encode_chunks(df, key_cols=["doc_id"], num_chunks=8,
-                                columns=["doc_id", "source"]), root)
-    chunks = read_chunks(spark, root)
-    sc = spark.sparkContext
+    chunks = read_chunks(spark, _doc_store(spark, tmp_path)).select("*")
     calls = {
         "prune": lambda: prune_chunks_multi(
             chunks, eq={"doc_id": [3, 141]}, ranges={"doc_id": (0, 400)}),
@@ -440,17 +448,34 @@ def test_pruning_runs_one_job(spark, tmp_path):
             chunks, ["doc_id", "source"], "doc_id long, source string",
             eq={"doc_id": 7}),
     }
-    try:
-        for name, call in calls.items():
-            sc.setJobGroup(f"prune-jobs-{name}", name)
-            call()
-            jobs = sc.statusTracker().getJobIdsForGroup(
-                f"prune-jobs-{name}")
-            assert len(jobs) == 1, (name, jobs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    for name, call in calls.items():
+        _, jobs = count_jobs(call)
+        assert jobs == 1, (name, jobs)
     d = calls["scan"]()
     assert [tuple(r) for r in d.collect()] == \
+        [tuple(r) for r in df.filter(F.col("doc_id") == 7)
+         .select("doc_id", "source").collect()]
+
+
+def test_local_store_lookup_runs_no_job(spark, tmp_path, count_jobs):
+    """Over the untransformed `read_chunks` frame of a local store,
+    prune_chunks_multi and scan_encoded(...).collect() run 0 Spark
+    jobs, with the answer of the Spark path."""
+    from varint_rvv_spark.operators.decode import scan_encoded
+    from varint_rvv_spark.sources.tables import read_chunks
+
+    df = spark.read.parquet(DOCS)
+    chunks = read_chunks(spark, _doc_store(spark, tmp_path))
+    pruned, jobs = count_jobs(lambda: prune_chunks_multi(
+        chunks, eq={"doc_id": [3, 141]}, ranges={"doc_id": (0, 400)}))
+    assert jobs == 0
+    assert pruned.select("chunk_id").distinct().count() < \
+        chunks.select("chunk_id").distinct().count()
+    rows, jobs = count_jobs(lambda: scan_encoded(
+        chunks, ["doc_id", "source"], "doc_id long, source string",
+        eq={"doc_id": 7}).collect())
+    assert jobs == 0
+    assert [tuple(r) for r in rows] == \
         [tuple(r) for r in df.filter(F.col("doc_id") == 7)
          .select("doc_id", "source").collect()]
 

@@ -128,7 +128,9 @@ def test_prune_plan_has_no_join_or_exchange(spark, pages, tmp_path):
     """prune_chunks_multi decides on the driver, so the pruned plan is
     the chunk scan plus at most an id filter — no join, no exchange —
     for one predicate and for several; scan_encoded's kept ids reach
-    the parquet scan as a pushed filter."""
+    the parquet scan as a pushed filter.  The store frame is derived
+    (`.select("*")`) so scan_encoded takes the Spark path: over the
+    untransformed `read_chunks` frame it decodes on the driver."""
     import re
 
     from varint_rvv_spark.operators.decode import (
@@ -151,8 +153,9 @@ def test_prune_plan_has_no_join_or_exchange(spark, pages, tmp_path):
     finally:
         chunks.unpersist()
     target = pages.agg(F.max("url")).collect()[0][0]
-    d = scan_encoded(read_chunks(spark, root), ["url", "lang"],
-                     "url string, lang string", eq={"url": target})
+    derived = read_chunks(spark, root).select("*")
+    d = scan_encoded(derived, ["url", "lang"], "url string, lang string",
+                     eq={"url": target})
     # one id collapses In(...) to EqualTo(...)
     assert re.search(r"PushedFilters: \[[^\]]*(In|EqualTo)\(chunk_id",
                      plan_of(d)), plan_of(d)

@@ -4,7 +4,9 @@ Chunks are self-contained (SURVEY.md §4 "complete-varint-only
 stride"): verification, `decode_only` and the contiguous decode of a
 fresh encode lineage are Scan → mapInArrow, zero shuffles; rebuilding
 rows from a parquet store (default `decode_table`) groups by chunk_id,
-one shuffle.  Verification recomputes each chunk's content hash from
+one shuffle.  A selective `scan_encoded` over a local `read_chunks`
+store decodes its few kept chunks on the driver instead: no job at all.
+Verification recomputes each chunk's content hash from
 the decoded values and compares with the footer's encode-time hash;
 `verify_roundtrip` reduces that to a single (total, mismatched) pair.
 """
@@ -14,9 +16,11 @@ from __future__ import annotations
 import json
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs import blob as B
+from ..sources.tables import local_files, read_local
 from .arrow_bridge import values_sha256, values_to_arrow
 from .eqstats import bloom_hex_test, eq_hashes, int_hashes
 
@@ -146,6 +150,11 @@ def verify_roundtrip(chunks: DataFrame) -> tuple[int, int]:
 # (route huge id lists through a semi-join on the decoded column instead)
 MAX_IN_PROBES = 64
 
+# scan_encoded decodes on the driver when the chunks it keeps from a
+# local `read_chunks` store hold at most this many encoded bytes over
+# the requested columns; larger reads take the Spark decode
+LOCAL_READ_BYTES = 64 << 20
+
 
 def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
                        ranges: dict | None = None) -> DataFrame:
@@ -174,24 +183,26 @@ def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
     A predicate column without footer rows raises (a typo would keep
     or drop everything silently), as does a probe of the wrong type.
     Cache a freshly-encoded lineage first (the footer job would
-    otherwise run the encode).
+    otherwise run the encode).  An untransformed `read_chunks` frame
+    over a local store has its footer read with pyarrow: 0 jobs.
     """
-    verdicts = _footer_verdicts(chunks, eq, ranges)
+    verdicts = _footer_verdicts(chunks, local_files(chunks), eq, ranges)
     if verdicts is None or not verdicts[1]:
         return chunks
     return chunks.filter(~F.col("chunk_id").isin(verdicts[1]))
 
 
-def _footer_verdicts(chunks: DataFrame, eq: dict | None,
+def _footer_verdicts(chunks: DataFrame, files: list | None,
+                     eq: dict | None,
                      ranges: dict | None) -> tuple[list, list] | None:
     """(kept_ids, dropped_ids) of the chunks with a footer row for a
     predicate column, or None when no predicate needs the footer.
 
-    One job, a plain projection (no aggregation, shuffle or broadcast);
-    rows are judged on the driver, each probe hashed once.  Driver
-    bytes are O(chunks): the predicate columns' stats_json, ~1.3 kB
-    per chunk-column for a 313-row url bloom, at most ~32 kB (the hex
-    of a BLOOM_MAX_M bitmap).
+    `files` is `local_files(chunks)`.  The rows come from
+    `_footer_rows` and are judged on the driver, each probe hashed
+    once.  Driver bytes are O(chunks): the predicate columns'
+    stats_json, ~1.3 kB per chunk-column for a 313-row url bloom, at
+    most ~32 kB (the hex of a BLOOM_MAX_M bitmap).
     """
     probes = {}
     for col, v in (eq or {}).items():
@@ -206,12 +217,10 @@ def _footer_verdicts(chunks: DataFrame, eq: dict | None,
     cols = list(probes) + [c for c in ranges if c not in probes]
     if not cols:
         return None
-    rows = (chunks.filter(F.col("column").isin(cols))
-            .select("chunk_id", "column", "dtype_code", "stats_json")
-            .collect())
+    rows = _footer_rows(chunks, files, cols)
     dtypes = {}
-    for r in rows:
-        dtypes.setdefault(r.column, int(r.dtype_code))
+    for _, col, dt, _ in rows:
+        dtypes.setdefault(col, int(dt))
     missing = [c for c in cols if c not in dtypes]
     if missing:
         raise ValueError(
@@ -223,14 +232,27 @@ def _footer_verdicts(chunks: DataFrame, eq: dict | None,
             _check_probe_type(dtypes[col], v, col)
         tests[col] = [_eq_probe(v) for v in vals]
     kept, dropped = set(), set()
-    for r in rows:
-        stats = json.loads(r.stats_json or "{}")
-        ok = ((r.column not in tests
-               or any(_may_contain(stats, p) for p in tests[r.column]))
-              and (r.column not in ranges
-                   or _overlaps(stats, *ranges[r.column])))
-        (kept if ok else dropped).add(r.chunk_id)
+    for cid, col, _, stats_json in rows:
+        stats = json.loads(stats_json or "{}")
+        ok = ((col not in tests
+               or any(_may_contain(stats, p) for p in tests[col]))
+              and (col not in ranges or _overlaps(stats, *ranges[col])))
+        (kept if ok else dropped).add(cid)
     return sorted(kept - dropped), sorted(dropped)
+
+
+def _footer_rows(chunks: DataFrame, files: list | None,
+                 cols: list) -> list:
+    """(chunk_id, column, dtype_code, stats_json) footer rows of the
+    columns `cols`: a pyarrow read of a local `read_chunks` frame's
+    `files` (no job), else (`files` None) one Spark job, a plain
+    projection (no aggregation, shuffle or broadcast)."""
+    fields = ["chunk_id", "column", "dtype_code", "stats_json"]
+    if files is None:
+        return (chunks.filter(F.col("column").isin(cols))
+                .select(*fields).collect())
+    tbl = read_local(files, cols, fields)
+    return list(zip(*(c.to_pylist() for c in tbl.columns)))
 
 
 def _check_probe_type(dt: int, value, column: str) -> None:
@@ -309,35 +331,7 @@ def decode_table(chunks: DataFrame, columns: list[str],
     if contiguous:
         return _decode_table_contiguous(chunks, columns, spark_schema)
 
-    # Spark quirk: applyInArrow expects timestamp[us, tz=<session tz>]
-    # for TimestampType fields but naive timestamp[us] for NTZ fields;
-    # attaching/stripping the tz is metadata-only (values stay epoch-µs)
-    from pyspark.sql.types import TimestampType, _parse_datatype_string
-
-    session_tz = chunks.sparkSession.conf.get(
-        "spark.sql.session.timeZone", "UTC")
-    struct = _parse_datatype_string(spark_schema)
-    ts_tz = {f.name: pa.timestamp("us", tz=session_tz)
-             if isinstance(f.dataType, TimestampType)
-             else pa.timestamp("us")
-             for f in struct.fields}
-
-    expected = _expected_arrow_types(spark_schema)
-
-    def rebuild(tbl: pa.Table) -> pa.Table:
-        d = tbl.to_pydict()
-        arrays = {}
-        for col, payload, logical, validity in zip(
-                d["column"], d["payload"], d["logical_type"],
-                d["validity"]):
-            values, _, dt = B.decode_blob(payload)
-            arr = _cast_narrow(values_to_arrow(
-                values, dt, logical, bytes(validity or b"")))
-            if pa.types.is_timestamp(arr.type):
-                arr = arr.cast(ts_tz[col])
-            _check_decoded_type(col, arr, expected)
-            arrays[col] = arr
-        return pa.table({c: arrays[c] for c in columns})
+    ts_tz, expected = _rebuild_types(chunks.sparkSession, spark_schema)
 
     # applyInArrow (not applyInPandas): pandas float columns cannot
     # represent NaN-the-value distinctly from null, which would turn
@@ -351,7 +345,45 @@ def decode_table(chunks: DataFrame, columns: list[str],
             .select("chunk_id", "column", "logical_type", "validity",
                     "payload")
             .groupBy("chunk_id")
-            .applyInArrow(rebuild, spark_schema))
+            .applyInArrow(
+                lambda tbl: _rebuild(tbl, columns, ts_tz, expected),
+                spark_schema))
+
+
+def _rebuild_types(spark, spark_schema: str) -> tuple[dict, dict]:
+    """(per-column arrow timestamp type, expected arrow types) that
+    `_rebuild` needs.  Spark quirk: applyInArrow and createDataFrame
+    take timestamp[us, tz=<session tz>] for TimestampType fields but
+    naive timestamp[us] for NTZ fields; attaching/stripping the tz is
+    metadata-only (values stay epoch-µs)."""
+    from pyspark.sql.types import TimestampType, _parse_datatype_string
+
+    session_tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+    ts_tz = {f.name: pa.timestamp("us", tz=session_tz)
+             if isinstance(f.dataType, TimestampType)
+             else pa.timestamp("us")
+             for f in _parse_datatype_string(spark_schema).fields}
+    return ts_tz, _expected_arrow_types(spark_schema)
+
+
+def _rebuild(tbl: pa.Table, columns: list[str], ts_tz: dict,
+             expected: dict) -> pa.Table:
+    """One chunk's rows of `columns` from its stored column rows
+    (`column`, `payload`, `logical_type`, `validity`) — the per-chunk
+    kernel of the grouped `decode_table` and of the driver-local
+    `scan_encoded`."""
+    d = tbl.to_pydict()
+    arrays = {}
+    for col, payload, logical, validity in zip(
+            d["column"], d["payload"], d["logical_type"], d["validity"]):
+        values, _, dt = B.decode_blob(payload)
+        arr = _cast_narrow(values_to_arrow(
+            values, dt, logical, bytes(validity or b"")))
+        if pa.types.is_timestamp(arr.type):
+            arr = arr.cast(ts_tz[col])
+        _check_decoded_type(col, arr, expected)
+        arrays[col] = arr
+    return pa.table({c: arrays[c] for c in columns})
 
 
 def _cast_narrow(arr: pa.Array) -> pa.Array:
@@ -467,6 +499,31 @@ def push_chunk_filter(chunks: DataFrame, pruned: DataFrame,
     return chunks.filter(F.col("chunk_id").isin(ids))
 
 
+def _decode_local(chunks: DataFrame, files: list | None,
+                  columns: list[str], spark_schema: str,
+                  kept: list | None) -> DataFrame | None:
+    """The chunks `kept` (None: all) of a local `read_chunks` frame
+    with data files `files`, decoded on the driver into a local
+    DataFrame; None when `files` is None or the chunks' encoded bytes
+    exceed LOCAL_READ_BYTES."""
+    if files is None:
+        return None
+    sizes = read_local(files, columns, ["encoded_bytes"], kept)
+    if (pc.sum(sizes["encoded_bytes"]).as_py() or 0) > LOCAL_READ_BYTES:
+        return None
+    stored = read_local(files, columns, ["chunk_id", "column", "payload",
+                                         "logical_type", "validity"], kept)
+    spark = chunks.sparkSession
+    ts_tz, expected = _rebuild_types(spark, spark_schema)
+    parts = [_rebuild(stored.filter(pc.equal(stored["chunk_id"], cid)),
+                      columns, ts_tz, expected)
+             for cid in pc.unique(stored["chunk_id"]).to_pylist()]
+    schema = pa.schema(list(expected.items()))
+    table = (pa.concat_tables(parts).select(schema.names) if parts
+             else schema.empty_table())
+    return spark.createDataFrame(table, spark_schema)
+
+
 def scan_encoded(chunks: DataFrame, columns: list[str],
                  spark_schema: str, eq: dict | None = None,
                  ranges: dict | None = None,
@@ -489,6 +546,16 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
     Predicate columns must be in `columns` (the residual filter needs
     them decoded) — raises otherwise.
 
+    Over an untransformed `read_chunks` frame whose files are local,
+    the footer is read with pyarrow, and when the kept chunks' payloads
+    over `columns` total at most LOCAL_READ_BYTES encoded bytes they
+    are read with pyarrow and decoded on the driver by the same
+    per-chunk `_rebuild`; the result is `spark.createDataFrame`, whose
+    residual filters Spark folds into a local relation, so collecting
+    a lookup runs 0 Spark jobs.  Every other frame — derived, in-
+    session, non-`file:`, or a kept set over the bound — is decoded by
+    Spark (`decode_table`).
+
     `contiguous` defaults to False because the primary use case is a
     store read back from parquet, where file splits break chunk
     adjacency (the repo invariant); pass True only when scanning a
@@ -501,11 +568,15 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
         raise ValueError(f"scan_encoded: predicate columns "
                          f"{sorted(missing)} must be in `columns` "
                          f"(the residual filter needs them decoded)")
-    verdicts = _footer_verdicts(chunks, eq, ranges)
-    if verdicts is not None and verdicts[1]:
-        chunks = chunks.filter(F.col("chunk_id").isin(verdicts[0]))
-    d = decode_table(chunks, columns, spark_schema,
-                     contiguous=contiguous)
+    files = local_files(chunks)
+    verdicts = _footer_verdicts(chunks, files, eq, ranges)
+    kept = verdicts[0] if verdicts is not None and verdicts[1] else None
+    d = _decode_local(chunks, files, columns, spark_schema, kept)
+    if d is None:
+        if kept is not None:
+            chunks = chunks.filter(F.col("chunk_id").isin(kept))
+        d = decode_table(chunks, columns, spark_schema,
+                         contiguous=contiguous)
 
     def as_num(col):
         from pyspark.sql.types import TimestampNTZType, TimestampType

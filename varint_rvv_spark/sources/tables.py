@@ -7,15 +7,29 @@ and `validity` (`footer_of`), whose bytes parquet column pruning skips.
 The same projection is the checkpoint ledger: `resume_footer` loads it
 (no chunk files yet → None) and encode passes it to skip finished chunks.
 A store whose writes held no rows reads as an empty chunks table.
+
+A `read_chunks` frame of the whole store is tagged with its root; while
+its data files are local, `local_files` + `read_local` give the driver
+pyarrow reads of exactly the files the frame lists (the lookup path of
+operators/decode.py).
 """
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
 
-from ..operators.encode import CHUNK_SPARK_SCHEMA, footer_of
+from ..operators.encode import (
+    CHUNK_ARROW_SCHEMA,
+    CHUNK_SPARK_SCHEMA,
+    footer_of,
+)
 
 # Parquet row-group cap for the chunks table (parquet's default is
 # 128 MB): the pruned read path pushes a `chunk_id IN (...)` scan
@@ -42,7 +56,16 @@ def read_chunks(spark: SparkSession, root: str,
                 columns: list[str] | None = None) -> DataFrame:
     """The store's chunks table; a store whose writes held no rows
     (parquet then leaves no data file to infer a schema from) reads
-    as an empty table with the stored chunk schema."""
+    as an empty table with the stored chunk schema.
+
+    With `columns=None` the frame is tagged with `root`, which makes
+    it eligible for driver-local lookups: while all its files are
+    local (`file:`), `prune_chunks_multi` and `scan_encoded` judge its
+    footer with pyarrow and `scan_encoded` decodes kept chunks under
+    `decode.LOCAL_READ_BYTES` on the driver, running 0 Spark jobs.
+    Any frame derived from it (a filter, a select, `columns=[...]`)
+    is a new DataFrame without the tag and takes the Spark path.
+    """
     try:
         df = spark.read.parquet(f"{root}/chunks")
     except AnalysisException as e:
@@ -55,7 +78,8 @@ def read_chunks(spark: SparkSession, root: str,
             [f for f in fields if f.name != "column"]
             + [f for f in fields if f.name == "column"]))
     if columns:
-        df = df.filter(df["column"].isin(columns))  # partition pruning
+        return df.filter(df["column"].isin(columns))  # partition pruning
+    df._store_root = root
     return df
 
 
@@ -79,3 +103,46 @@ def resume_footer(spark: SparkSession, root: str) -> DataFrame | None:
         raise
     # listing the files runs no job
     return footer if footer.inputFiles() else None
+
+
+def local_files(chunks: DataFrame) -> list[str] | None:
+    """Data file paths of a tagged `read_chunks` frame whose files are
+    all local, else None.
+
+    The listing is the frame's own `inputFiles()` (no job): the files
+    Spark listed when the frame was read, so the driver reads what the
+    frame's Spark plan would read, even after a later append.
+    """
+    if vars(chunks).get("_store_root") is None:
+        return None
+    paths = []
+    for uri in chunks.inputFiles():
+        url = urlparse(uri)
+        if url.scheme != "file":
+            return None
+        paths.append(unquote(url.path))
+    return paths
+
+
+def read_local(paths: list[str], columns: list[str], fields: list[str],
+               chunk_ids: list | None = None) -> pa.Table:
+    """`fields` of the stored rows of `columns` in `local_files`'
+    listing, read with pyarrow (the `column=` directories skip other
+    columns' files); `chunk_ids` filters rows (parquet statistics skip
+    row groups), None keeps all."""
+    # imported here: pyarrow.dataset pulls in pandas, and the Python
+    # workers that import this module (via operators/decode.py) never
+    # read a store themselves
+    import pyarrow.dataset as ds
+
+    keep = pc.field("column").isin(columns)
+    if chunk_ids is not None:
+        keep &= pc.field("chunk_id").isin(pa.array(chunk_ids, pa.int64()))
+    return ds.dataset(
+        paths, schema=CHUNK_ARROW_SCHEMA, format="parquet",
+        # write_encoded's layout: <root>/chunks/column=<name>/part-*
+        partitioning=ds.partitioning(pa.schema([("column", pa.string())]),
+                                     flavor="hive"),
+        partition_base_dir=os.path.dirname(os.path.dirname(paths[0]))
+        if paths else None,
+    ).to_table(columns=fields, filter=keep)
