@@ -9,7 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from varint_rvv_spark.operators import decode
-from varint_rvv_spark.operators.decode import MAX_IN_PROBES, scan_encoded
+from varint_rvv_spark.operators.decode import (
+    MAX_IN_PROBES,
+    prune_chunks_multi,
+    scan_encoded,
+)
 from varint_rvv_spark.operators.encode import encode_chunks_scan
 from varint_rvv_spark.sources.tables import read_chunks, write_encoded
 
@@ -59,15 +63,20 @@ def store(spark, tmp_path_factory):
 
 
 def _both(spark, root, count_jobs, **pred):
-    """(local rows, spark rows, local frame schema, spark frame schema);
-    the local path must run no job."""
-    local = scan_encoded(read_chunks(spark, root), COLS, SCHEMA, **pred)
+    """(tagged-frame rows, spark rows, tagged frame schema, spark frame
+    schema, skipped).  The tagged frame takes the local path (no job)
+    exactly when footer pruning skips some chunk (`skipped`), else it
+    decodes on Spark."""
+    tagged = read_chunks(spark, root)
+    skipped = prune_chunks_multi(tagged, pred.get("eq"),
+                                 pred.get("ranges")) is not tagged
+    local = scan_encoded(tagged, COLS, SCHEMA, **pred)
     rows, jobs = count_jobs(local.collect)
-    assert jobs == 0, pred
+    assert (jobs == 0) == skipped, pred
     forced = scan_encoded(read_chunks(spark, root).select("*"), COLS,
                           SCHEMA, **pred)
     return _sorted(rows), _sorted(forced.collect()), local.schema, \
-        forced.schema
+        forced.schema, skipped
 
 
 def test_local_and_spark_paths_return_the_same_rows(spark, store,
@@ -79,27 +88,34 @@ def test_local_and_spark_paths_return_the_same_rows(spark, store,
         F.unix_micros("ts").alias("ts_us")).collect()]
     i_lo, i_hi = sorted(r[1] for r in some[:2])
     t_lo, t_hi = sorted(us[2:4])
+    long_in = [r[1] for r in some[:MAX_IN_PROBES + 1]]
     cases = [
         {"eq": {"s": some[0][0]}},
         {"eq": {"i": some[1][1]}},
         {"eq": {"lang": some[2][3], "i": some[2][1]}},
         {"eq": {"s": [r[0] for r in some[:5]] + ["absent"]}},
-        {"eq": {"i": [r[1] for r in some[:MAX_IN_PROBES + 1]]}},
-        {"ranges": {"i": (i_lo, i_hi)}},
-        {"ranges": {"i": (None, i_lo)}},
-        {"ranges": {"i": (i_hi, None)}},
+        {"eq": {"i": long_in}, "ranges": {"ts": (us[0], us[0])}},
         {"ranges": {"ts": (t_lo, t_hi)}},
         {"ranges": {"ts": (None, t_lo)}},
         {"ranges": {"ts": (t_hi, None)}},
         {"eq": {"lang": "fr"}, "ranges": {"ts": (t_lo, t_hi)}},
-        {},
     ]
-    for pred in cases:
-        local, forced, _, _ = _both(spark, root, count_jobs, **pred)
+    # the int column's zone maps span its NULL slots, so these may
+    # skip nothing and decode on Spark
+    int_ranges = [{"ranges": {"i": (i_lo, i_hi)}},
+                  {"ranges": {"i": (None, i_lo)}},
+                  {"ranges": {"i": (i_hi, None)}}]
+    # an IN-list over MAX_IN_PROBES alone judges no footer: no chunk
+    # is skipped, so the tagged frame decodes on Spark
+    no_skip = {"eq": {"i": long_in}}
+    for pred in cases + int_ranges + [no_skip]:
+        local, forced, _, _, skipped = _both(spark, root, count_jobs,
+                                             **pred)
         assert local == forced and local, pred
+        assert skipped == (pred in cases) or pred in int_ranges, pred
     # a probe no chunk holds: no rows, the declared schema
-    local, forced, ls, fs = _both(spark, root, count_jobs,
-                                  eq={"lang": "xx"})
+    local, forced, ls, fs, _ = _both(spark, root, count_jobs,
+                                     eq={"lang": "xx"})
     assert local == forced == []
     assert ls == fs == spark.createDataFrame([], SCHEMA).schema
 
@@ -109,10 +125,25 @@ def test_over_the_bound_takes_the_spark_path(spark, store, count_jobs,
     root, rows = store
     monkeypatch.setattr(decode, "LOCAL_READ_BYTES", 0)
     hit = rows[1][0]
-    got, jobs = count_jobs(lambda: scan_encoded(
-        read_chunks(spark, root), COLS, SCHEMA, eq={"s": hit}).collect())
+    # read outside the count: reading a store may itself run a job
+    tagged = read_chunks(spark, root)
+    got, jobs = count_jobs(scan_encoded(tagged, COLS, SCHEMA,
+                                        eq={"s": hit}).collect)
     assert jobs >= 1
     assert _sorted(got) == _sorted(r for r in rows if r[0] == hit)
+
+
+def test_unpruned_scans_take_the_spark_path(spark, store, count_jobs):
+    """With nothing to skip (no predicate, or one every chunk may
+    match) the tagged frame's whole store is decoded by Spark in
+    parallel, not on the driver."""
+    root, rows = store
+    tagged = read_chunks(spark, root)
+    for pred in ({}, {"eq": {"lang": ["en", "de", "fr", "ja"]}}):
+        got, jobs = count_jobs(scan_encoded(tagged, COLS, SCHEMA,
+                                            **pred).collect)
+        assert jobs >= 1, pred
+        assert _sorted(got) == _sorted(rows), pred
 
 
 def test_both_paths_raise_the_same_errors(spark, store, tmp_path):
@@ -140,12 +171,15 @@ def test_frame_file_listing_is_the_snapshot(spark, tmp_path, count_jobs):
     before = read_chunks(spark, root)
     extra = _store(spark, root, _rows(4, 10, base=600), id_base=1 << 40,
                    mode="append")
-    ts_us = {"ts": (T0, T0 + 10**9)}
+    # an IN-list of one old and one appended value skips the other
+    # chunks, so the tagged frames take the local path
+    old, new = (next(r for r in rs if r[0]) for rs in (rows, extra))
+    probe = {"s": [old[0], new[0]]}
     old_local, jobs = count_jobs(lambda: scan_encoded(
-        before, COLS, SCHEMA, ranges=ts_us).collect())
+        before, COLS, SCHEMA, eq=probe).collect())
     assert jobs == 0
     old_spark = scan_encoded(before.select("*"), COLS, SCHEMA,
-                             ranges=ts_us).collect()
-    assert _sorted(old_local) == _sorted(old_spark) == _sorted(rows)
-    fresh, _, _, _ = _both(spark, root, count_jobs, ranges=ts_us)
-    assert fresh == _sorted(rows + extra)
+                             eq=probe).collect()
+    assert _sorted(old_local) == _sorted(old_spark) == _sorted([old])
+    fresh, _, _, _, _ = _both(spark, root, count_jobs, eq=probe)
+    assert fresh == _sorted([old, new])

@@ -4,8 +4,9 @@ Chunks are self-contained (SURVEY.md §4 "complete-varint-only
 stride"): verification, `decode_only` and the contiguous decode of a
 fresh encode lineage are Scan → mapInArrow, zero shuffles; rebuilding
 rows from a parquet store (default `decode_table`) groups by chunk_id,
-one shuffle.  A selective `scan_encoded` over a local `read_chunks`
-store decodes its few kept chunks on the driver instead: no job at all.
+one shuffle.  A `scan_encoded` over a local `read_chunks` store whose
+pruning skips some chunks and keeps at most LOCAL_READ_BYTES decodes
+the kept ones on the driver instead: no job at all.
 Verification recomputes each chunk's content hash from
 the decoded values and compares with the footer's encode-time hash;
 `verify_roundtrip` reduces that to a single (total, mismatched) pair.
@@ -152,8 +153,17 @@ MAX_IN_PROBES = 64
 
 # scan_encoded decodes on the driver when the chunks it keeps from a
 # local `read_chunks` store hold at most this many encoded bytes over
-# the requested columns; larger reads take the Spark decode
-LOCAL_READ_BYTES = 64 << 20
+# the requested columns; larger reads take the Spark decode.  Set at
+# the measured crossover (4-vCPU host, Spark on local[3], 64-chunk
+# perfbench stores, seed 7, median of 5-9 reads per point): driver
+# decode costs ~0.17 s per encoded MB of ints_etl's 30,000-row chunks
+# (0.35 vs Spark's 0.55 s at 1.2 MB, 0.55 vs 0.61 s at 2.3 MB, 1.08
+# vs 0.66 s at 4.7 MB), ~0.03 s per MB of pages_etl's 313-row chunks
+# (0.33 vs 0.60 s at 9.3 MB).  Under the bound the driver holds at
+# most ~10 MB of decoded Arrow plus the JVM's local-relation copy
+# (~40 MB of heap), and createDataFrame stays a local relation with
+# no job (at 18 MB encoded it ran one).
+LOCAL_READ_BYTES = 2 << 20
 
 
 def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
@@ -193,16 +203,19 @@ def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
 
 
 def _footer_verdicts(chunks: DataFrame, files: list | None,
-                     eq: dict | None,
-                     ranges: dict | None) -> tuple[list, list] | None:
-    """(kept_ids, dropped_ids) of the chunks with a footer row for a
-    predicate column, or None when no predicate needs the footer.
+                     eq: dict | None, ranges: dict | None,
+                     sized: list | tuple = ()) -> tuple | None:
+    """(kept_ids, dropped_ids, kept_bytes) of the chunks with a footer
+    row for a predicate column, or None when no predicate needs the
+    footer.
 
     `files` is `local_files(chunks)`.  The rows come from
     `_footer_rows` and are judged on the driver, each probe hashed
     once.  Driver bytes are O(chunks): the predicate columns'
     stats_json, ~1.3 kB per chunk-column for a 313-row url bloom, at
-    most ~32 kB (the hex of a BLOOM_MAX_M bitmap).
+    most ~32 kB (the hex of a BLOOM_MAX_M bitmap).  `kept_bytes` is
+    the kept chunks' `encoded_bytes` over the columns `sized`, read in
+    the same pyarrow pass (None on the Spark path, `files` None).
     """
     probes = {}
     for col, v in (eq or {}).items():
@@ -217,10 +230,10 @@ def _footer_verdicts(chunks: DataFrame, files: list | None,
     cols = list(probes) + [c for c in ranges if c not in probes]
     if not cols:
         return None
-    rows = _footer_rows(chunks, files, cols)
+    rows = _footer_rows(chunks, files, cols, sized)
     dtypes = {}
-    for _, col, dt, _ in rows:
-        dtypes.setdefault(col, int(dt))
+    for r in rows:
+        dtypes.setdefault(r[1], int(r[2]))
     missing = [c for c in cols if c not in dtypes]
     if missing:
         raise ValueError(
@@ -232,26 +245,33 @@ def _footer_verdicts(chunks: DataFrame, files: list | None,
             _check_probe_type(dtypes[col], v, col)
         tests[col] = [_eq_probe(v) for v in vals]
     kept, dropped = set(), set()
-    for cid, col, _, stats_json in rows:
+    for cid, col, _, stats_json, *_ in rows:
+        if col not in cols:
+            continue  # a `sized` row, read only for its encoded_bytes
         stats = json.loads(stats_json or "{}")
         ok = ((col not in tests
                or any(_may_contain(stats, p) for p in tests[col]))
               and (col not in ranges or _overlaps(stats, *ranges[col])))
         (kept if ok else dropped).add(cid)
-    return sorted(kept - dropped), sorted(dropped)
+    kept -= dropped
+    kept_bytes = None if files is None else sum(
+        r[4] for r in rows if r[1] in sized and r[0] in kept)
+    return sorted(kept), sorted(dropped), kept_bytes
 
 
-def _footer_rows(chunks: DataFrame, files: list | None,
-                 cols: list) -> list:
+def _footer_rows(chunks: DataFrame, files: list | None, cols: list,
+                 sized: list | tuple) -> list:
     """(chunk_id, column, dtype_code, stats_json) footer rows of the
-    columns `cols`: a pyarrow read of a local `read_chunks` frame's
-    `files` (no job), else (`files` None) one Spark job, a plain
-    projection (no aggregation, shuffle or broadcast)."""
+    columns `cols`: one Spark job, a plain projection (no aggregation,
+    shuffle or broadcast); or, for a local `read_chunks` frame's
+    `files`, one pyarrow read (no job) of the rows of `cols` and
+    `sized`, each with its `encoded_bytes` appended."""
     fields = ["chunk_id", "column", "dtype_code", "stats_json"]
     if files is None:
         return (chunks.filter(F.col("column").isin(cols))
                 .select(*fields).collect())
-    tbl = read_local(files, cols, fields)
+    tbl = read_local(files, list(dict.fromkeys([*cols, *sized])),
+                     fields + ["encoded_bytes"])
     return list(zip(*(c.to_pylist() for c in tbl.columns)))
 
 
@@ -499,21 +519,13 @@ def push_chunk_filter(chunks: DataFrame, pruned: DataFrame,
     return chunks.filter(F.col("chunk_id").isin(ids))
 
 
-def _decode_local(chunks: DataFrame, files: list | None,
-                  columns: list[str], spark_schema: str,
-                  kept: list | None) -> DataFrame | None:
-    """The chunks `kept` (None: all) of a local `read_chunks` frame
-    with data files `files`, decoded on the driver into a local
-    DataFrame; None when `files` is None or the chunks' encoded bytes
-    exceed LOCAL_READ_BYTES."""
-    if files is None:
-        return None
-    sizes = read_local(files, columns, ["encoded_bytes"], kept)
-    if (pc.sum(sizes["encoded_bytes"]).as_py() or 0) > LOCAL_READ_BYTES:
-        return None
+def _decode_local(spark, files: list, columns: list[str],
+                  spark_schema: str, kept: list) -> DataFrame:
+    """The chunks `kept` of a local `read_chunks` frame with data files
+    `files`, read with pyarrow and decoded on the driver into a local
+    DataFrame (0 jobs)."""
     stored = read_local(files, columns, ["chunk_id", "column", "payload",
                                          "logical_type", "validity"], kept)
-    spark = chunks.sparkSession
     ts_tz, expected = _rebuild_types(spark, spark_schema)
     parts = [_rebuild(stored.filter(pc.equal(stored["chunk_id"], cid)),
                       columns, ts_tz, expected)
@@ -547,14 +559,15 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
     them decoded) — raises otherwise.
 
     Over an untransformed `read_chunks` frame whose files are local,
-    the footer is read with pyarrow, and when the kept chunks' payloads
-    over `columns` total at most LOCAL_READ_BYTES encoded bytes they
+    the footer is read with pyarrow, and when pruning skips some chunk
+    and the kept chunks' payloads over `columns` total at most
+    LOCAL_READ_BYTES encoded bytes (read in the same footer pass) they
     are read with pyarrow and decoded on the driver by the same
     per-chunk `_rebuild`; the result is `spark.createDataFrame`, whose
     residual filters Spark folds into a local relation, so collecting
-    a lookup runs 0 Spark jobs.  Every other frame — derived, in-
-    session, non-`file:`, or a kept set over the bound — is decoded by
-    Spark (`decode_table`).
+    a lookup runs 0 Spark jobs.  Every other read — a derived, in-
+    session or non-`file:` frame, a scan that skips nothing, or a kept
+    set over the bound — is decoded by Spark (`decode_table`).
 
     `contiguous` defaults to False because the primary use case is a
     store read back from parquet, where file splits break chunk
@@ -569,14 +582,16 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
                          f"{sorted(missing)} must be in `columns` "
                          f"(the residual filter needs them decoded)")
     files = local_files(chunks)
-    verdicts = _footer_verdicts(chunks, files, eq, ranges)
-    kept = verdicts[0] if verdicts is not None and verdicts[1] else None
-    d = _decode_local(chunks, files, columns, spark_schema, kept)
-    if d is None:
-        if kept is not None:
-            chunks = chunks.filter(F.col("chunk_id").isin(kept))
+    verdicts = _footer_verdicts(chunks, files, eq, ranges, sized=columns)
+    if verdicts is None or not verdicts[1]:
         d = decode_table(chunks, columns, spark_schema,
                          contiguous=contiguous)
+    elif verdicts[2] is not None and verdicts[2] <= LOCAL_READ_BYTES:
+        d = _decode_local(chunks.sparkSession, files, columns,
+                          spark_schema, verdicts[0])
+    else:
+        d = decode_table(chunks.filter(F.col("chunk_id").isin(verdicts[0])),
+                         columns, spark_schema, contiguous=contiguous)
 
     def as_num(col):
         from pyspark.sql.types import TimestampNTZType, TimestampType

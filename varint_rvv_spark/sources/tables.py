@@ -61,8 +61,9 @@ def read_chunks(spark: SparkSession, root: str,
     With `columns=None` the frame is tagged with `root`, which makes
     it eligible for driver-local lookups: while all its files are
     local (`file:`), `prune_chunks_multi` and `scan_encoded` judge its
-    footer with pyarrow and `scan_encoded` decodes kept chunks under
-    `decode.LOCAL_READ_BYTES` on the driver, running 0 Spark jobs.
+    footer with pyarrow, and when pruning skips some chunk
+    `scan_encoded` decodes the kept ones on the driver if they hold at
+    most `decode.LOCAL_READ_BYTES` encoded bytes, running 0 Spark jobs.
     Any frame derived from it (a filter, a select, `columns=[...]`)
     is a new DataFrame without the tag and takes the Spark path.
     """
