@@ -333,6 +333,26 @@ def test_footer_topk_null_heavy_store_stays_exact(spark):
     chunks.unpersist()
 
 
+def test_footer_topk_ascending_keeps_chunks_with_nulls(spark):
+    """Ascending order puts NULLs first, so a chunk holding NULL order
+    values stays a candidate even when its zone map (non-NULL values
+    only) lies above the threshold."""
+    from varint_rvv_spark.operators.encode import encode_chunks_range
+    from varint_rvv_spark.operators.footer_stats import footer_topk
+
+    df = spark.createDataFrame(
+        [(i, None if i >= 60 and i % 5 == 0 else float(i))
+         for i in range(80)], "id long, v double")
+    chunks = encode_chunks_range(df, ["id"], num_partitions=1,
+                                 rows_per_chunk=20).cache()
+    cand = footer_topk(chunks, "v", 5, ["id", "v"],
+                       "id long, v double", descending=False)
+    got = [tuple(r) for r in cand.orderBy("v", "id").limit(5).collect()]
+    exp = [tuple(r) for r in df.orderBy("v", "id").limit(5).collect()]
+    assert got == exp and exp[0][1] is None
+    chunks.unpersist()
+
+
 def test_footer_percentile_sample_window_is_partitioned(spark):
     """The per-sample ordered window must be partitioned (by winning
     bucket) — the scale fix: no single-partition exchange ever carries

@@ -3,6 +3,7 @@
 same store: same rows, same errors, same file snapshot."""
 
 import datetime as dt
+import json
 import random
 
 import pytest
@@ -99,25 +100,55 @@ def test_local_and_spark_paths_return_the_same_rows(spark, store,
         {"ranges": {"ts": (None, t_lo)}},
         {"ranges": {"ts": (t_hi, None)}},
         {"eq": {"lang": "fr"}, "ranges": {"ts": (t_lo, t_hi)}},
+        {"ranges": {"i": (i_lo, i_hi)}},
+        {"ranges": {"i": (None, i_lo)}},
+        {"ranges": {"i": (i_hi, None)}},
     ]
-    # the int column's zone maps span its NULL slots, so these may
-    # skip nothing and decode on Spark
-    int_ranges = [{"ranges": {"i": (i_lo, i_hi)}},
-                  {"ranges": {"i": (None, i_lo)}},
-                  {"ranges": {"i": (i_hi, None)}}]
     # an IN-list over MAX_IN_PROBES alone judges no footer: no chunk
     # is skipped, so the tagged frame decodes on Spark
     no_skip = {"eq": {"i": long_in}}
-    for pred in cases + int_ranges + [no_skip]:
+    for pred in cases + [no_skip]:
         local, forced, _, _, skipped = _both(spark, root, count_jobs,
                                              **pred)
         assert local == forced and local, pred
-        assert skipped == (pred in cases) or pred in int_ranges, pred
+        assert skipped == (pred in cases), pred
     # a probe no chunk holds: no rows, the declared schema
     local, forced, ls, fs, _ = _both(spark, root, count_jobs,
                                      eq={"lang": "xx"})
     assert local == forced == []
     assert ls == fs == spark.createDataFrame([], SCHEMA).schema
+
+
+def test_range_on_nullable_int_column_skips_chunks(spark, tmp_path,
+                                                   count_jobs):
+    """Zone maps span a chunk's non-NULL values only: a range on a
+    nullable int column skips the chunks outside it, and an all-NULL
+    chunk has no zone map, so it is kept."""
+    root = str(tmp_path / "store")
+    # 4 chunks of 250 rows: the first all NULL, the others NULL every
+    # 13th row around disjoint value spans
+    rows = [(k, None if k < 250 or k % 13 == 0 else 3 * k)
+            for k in range(1000)]
+    df = spark.createDataFrame(rows, "k long, i long").coalesce(1)
+    write_encoded(encode_chunks_scan(df, rows_per_chunk=250), root)
+    stats = {r.chunk_id: json.loads(r.stats_json) for r in
+             read_chunks(spark, root).filter(F.col("column") == "i")
+             .select("chunk_id", "stats_json").collect()}
+    assert sum("vmin" not in s for s in stats.values()) == 1
+    assert sorted((s["vmin"], s["vmax"]) for s in stats.values()
+                  if "vmin" in s) == [(750, 1497), (1500, 2247),
+                                      (2250, 2997)]
+    tagged = read_chunks(spark, root)
+    kept = prune_chunks_multi(tagged, ranges={"i": (1600, 1700)})
+    kept_ids = {r.chunk_id for r in kept.select("chunk_id").collect()}
+    assert {i for i, s in stats.items()
+            if "vmin" not in s or s["vmin"] == 1500} == kept_ids
+    got, jobs = count_jobs(scan_encoded(
+        tagged, ["k", "i"], "k long, i long",
+        ranges={"i": (1600, 1700)}).collect)
+    assert jobs == 0
+    assert sorted(tuple(r) for r in got) == [
+        r for r in rows if r[1] is not None and 1600 <= r[1] <= 1700]
 
 
 def test_over_the_bound_takes_the_spark_path(spark, store, count_jobs,

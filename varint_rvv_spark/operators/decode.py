@@ -179,9 +179,10 @@ def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
     when any probe may (OR); an empty list raises, and one longer than
     MAX_IN_PROBES keeps every chunk for that predicate without touching
     the footer.  `ranges`: {column: (lo, hi)} keeps chunks whose
-    encode-time [vmin, vmax] zone map can overlap the inclusive range
-    (either bound may be None; compared exactly, epoch-µs timestamps
-    included); chunks without a zone map (varlen/NaN columns) are kept.
+    encode-time [vmin, vmax] zone map (over the chunk's non-NULL
+    values) can overlap the inclusive range (either bound may be None;
+    compared exactly, epoch-µs timestamps included); chunks without a
+    zone map (varlen/NaN columns, all-NULL chunks) are kept.
 
     A chunk is dropped only when some predicate is false on its
     footer row for the predicate column (`_footer_verdicts`, one job),

@@ -106,15 +106,23 @@ def _append_column_row(rows: dict, chunk_id: int, col: str, arr,
             out_stats["tail"] = [cast(x) for x in values[-10:]]
             # zone map: chunk min/max drives decode-time chunk pruning
             # (operators/decode.prune_chunks_multi) — the engine twin of
-            # parquet row-group statistics
-            if kind == "f" and not np.isfinite(values).all():
+            # parquet row-group statistics.  Taken over the valid slots
+            # only (`values` is null-filled); an all-NULL chunk gets
+            # none, and a chunk without one is never pruned
+            valid = values
+            if validity:
+                valid = values[np.unpackbits(
+                    np.frombuffer(validity, np.uint8), count=len(values),
+                    bitorder="little").view(bool)]
+            if kind == "f" and not np.isfinite(valid).all():
                 pass  # NaN poisons min/max ordering; no zone map
-            else:
-                out_stats["vmin"] = cast(values.min())
-                out_stats["vmax"] = cast(values.max())
+            elif len(valid):
+                out_stats["vmin"] = cast(valid.min())
+                out_stats["vmax"] = cast(valid.max())
                 # exact chunk sum → COUNT/SUM answered from the footer
                 # alone (aggregate pushdown to statistics); only when
                 # n·max|v| provably fits int64, so it is always exact
+                # (the null fill is 0, so it adds nothing)
                 if kind in "iu" and len(values) * max(
                         abs(out_stats["vmin"]),
                         abs(out_stats["vmax"]), 1) < (1 << 62):

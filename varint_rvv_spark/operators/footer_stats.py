@@ -160,8 +160,9 @@ def footer_range_agg(chunks: DataFrame, value_col: str,
       ids/fingerprints would misclassify boundary chunks as interior);
     * interior chunks whose `value_col` lacks the exact vsum stat
       (overflow-guarded out at encode time) decode instead;
-    * chunks whose `range_col` contains NULLs (encode null-fills, so
-      the footer path would count rows SQL excludes) decode instead;
+    * chunks whose `range_col` contains NULLs (their rows are not all
+      inside the range, so the footer path would count rows SQL
+      excludes) decode instead;
     * every chunk must have a footer row for both columns — a store
       where either column was added later via schema evolution raises
       rather than silently dropping the uncovered chunks;
@@ -319,14 +320,14 @@ def footer_range_agg(chunks: DataFrame, value_col: str,
             f"footer_range_agg: value column {value_col!r} stores "
             f"logical type {cov.v_lt!r}, whose footer vsum is not in "
             f"decoded-value units — decode and aggregate instead")
-    # null-filled range values poison the containment test (fill=0):
-    # any chunk with a validity bitmap on range_col decodes instead
+    # NULL range rows never match, so `interior` (every row matches)
+    # needs a chunk without a validity bitmap on range_col
     no_nulls = F.coalesce(F.length("validity"), F.lit(0)) == 0
     interior = (vmin.isNotNull() & vmax.isNotNull()
                 & (vmin >= lo_b) & (vmax <= hi_b) & no_nulls)
     # overlap stays conservative: null stats → kept (decode path);
-    # the null-fill only ever WIDENS [vmin, vmax], so a chunk with
-    # NULL range rows can gain overlap but never lose it
+    # [vmin, vmax] spans the valid rows only, and NULL range rows
+    # never match, so a chunk outside it holds no matching row
     overlap = ((vmax.isNull() | (vmax >= lo_b))
                & (vmin.isNull() | (vmin <= hi_b)))
     interior_ids = rc.filter(interior).select("chunk_id")
@@ -377,12 +378,14 @@ def footer_topk(chunks: DataFrame, order_col: str, k: int,
     chunks per query at any store size.
 
     Conservative with nulls and missing stats: a chunk with a
-    validity bitmap on `order_col` (null-filled stats) or without a
-    zone map contributes 0 guaranteed rows but stays a candidate, so
-    the result is exact even when every chunk has nulls (degrades to
-    full decode, never a wrong answer).  ORDER BY semantics are
-    Spark's defaults (NULLS LAST for DESC / FIRST for ASC) — the
-    caller applies the final orderBy + limit.
+    validity bitmap on `order_col` or without a zone map contributes
+    0 guaranteed rows.  A chunk without a zone map is always a
+    candidate, and so is one with NULLs when ascending (NULLS FIRST
+    puts them ahead of every value), so the result is exact even when
+    every chunk has nulls (degrades to full decode, never a wrong
+    answer).  ORDER BY semantics are Spark's defaults (NULLS LAST for
+    DESC / FIRST for ASC) — the caller applies the final orderBy +
+    limit.
 
     The chunk-selection window runs over footer metadata (one row per
     chunk) — the same deliberate metadata-scale trade as
@@ -420,7 +423,9 @@ def footer_topk(chunks: DataFrame, order_col: str, k: int,
     order = [F.desc_nulls_last("_lead")] if descending \
         else [F.asc_nulls_last("_lead")]
     meta = rc.select("chunk_id", lead.alias("_lead"),
-                     trail.alias("_trail"), eff.alias("_eff"))
+                     trail.alias("_trail"), eff.alias("_eff"),
+                     (F.lit(False) if descending else ~no_nulls)
+                     .alias("_nulls_first"))
     w = (Window.orderBy(*order, "chunk_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     meta = meta.withColumn("_cum", F.sum("_eff").over(w))
@@ -429,13 +434,15 @@ def footer_topk(chunks: DataFrame, order_col: str, k: int,
                       else F.max("_trail")).alias("t"),
                      F.sum("_eff").alias("got")))
     # candidates: taken ∪ chunks whose lead stat crosses the
-    # threshold (ties at t included); statless/nully chunks are
-    # always candidates.  When the taken set still lacks k guaranteed
-    # rows (tiny or all-null store), keep everything.
+    # threshold (ties at t included); statless chunks, and chunks
+    # whose NULLs sort first, are always candidates.  When the taken
+    # set still lacks k guaranteed rows (tiny or all-null store), keep
+    # everything.
     cand_ids = (meta.crossJoin(F.broadcast(thr))
                 .filter(F.col("t").isNull()
                         | (F.col("got") < k)
                         | F.col("_lead").isNull()
+                        | F.col("_nulls_first")
                         | (F.col("_lead") >= F.col("t")
                            if descending
                            else F.col("_lead") <= F.col("t")))
