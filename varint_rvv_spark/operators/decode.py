@@ -6,7 +6,9 @@ fresh encode lineage are Scan → mapInArrow, zero shuffles; rebuilding
 rows from a parquet store (default `decode_table`) groups by chunk_id,
 one shuffle.  A `scan_encoded` over a local `read_chunks` store whose
 pruning skips some chunks and keeps at most LOCAL_READ_BYTES decodes
-the kept ones on the driver instead: no job at all.
+the kept ones on the driver instead: no job at all, and each decoded
+chunk is cut down in Arrow (`_prefilter`) before it crosses into the
+JVM for Spark's residual filter.
 Verification recomputes each chunk's content hash from
 the decoded values and compares with the footer's encode-time hash;
 `verify_roundtrip` reduces that to a single (total, mismatched) pair.
@@ -15,14 +17,27 @@ the decoded values and compares with the footer's encode-time hash;
 from __future__ import annotations
 
 import json
+from functools import reduce
+from operator import and_
 
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _parse_datatype_string,
+)
 
 from ..codecs import blob as B
 from ..sources.tables import local_files, read_local
-from .arrow_bridge import values_sha256, values_to_arrow
+from .arrow_bridge import LT_TIMESTAMP_US, values_sha256, values_to_arrow
 from .eqstats import bloom_hex_test, eq_hashes, int_hashes
 
 VERIFY_SCHEMA = ("chunk_id long, column string, n_values long, "
@@ -162,8 +177,12 @@ MAX_IN_PROBES = 64
 # (0.33 vs 0.60 s at 9.3 MB).  Under the bound the driver holds at
 # most ~10 MB of decoded Arrow plus the JVM's local-relation copy
 # (~40 MB of heap), and createDataFrame stays a local relation with
-# no job (at 18 MB encoded it ran one).
+# no job (at 18 MB encoded it ran one).  These figures were taken with
+# whole kept chunks crossing into the JVM, before `_prefilter`; re-
+# measure before moving the bound.
 LOCAL_READ_BYTES = 2 << 20
+
+_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
 
 
 def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
@@ -182,7 +201,11 @@ def prune_chunks_multi(chunks: DataFrame, eq: dict | None = None,
     encode-time [vmin, vmax] zone map (over the chunk's non-NULL
     values) can overlap the inclusive range (either bound may be None;
     compared exactly, epoch-µs timestamps included); chunks without a
-    zone map (varlen/NaN columns, all-NULL chunks) are kept.
+    zone map (varlen/NaN columns, all-NULL chunks) are kept.  A
+    timestamp_ntz value counts as `unix_micros(col.cast("timestamp"))`,
+    wall-clock time in the session zone, so its range is widened by
+    NTZ_SLACK_US against zone maps of wall-clock µs: it keeps every
+    matching chunk whatever the zone.
 
     A chunk is dropped only when some predicate is false on its
     footer row for the predicate column (`_footer_verdicts`, one job),
@@ -212,11 +235,13 @@ def _footer_verdicts(chunks: DataFrame, files: list | None,
 
     `files` is `local_files(chunks)`.  The rows come from
     `_footer_rows` and are judged on the driver, each probe hashed
-    once.  Driver bytes are O(chunks): the predicate columns'
-    stats_json, ~1.3 kB per chunk-column for a 313-row url bloom, at
-    most ~32 kB (the hex of a BLOOM_MAX_M bitmap).  `kept_bytes` is
-    the kept chunks' `encoded_bytes` over the columns `sized`, read in
-    the same pyarrow pass (None on the Spark path, `files` None).
+    once; a timestamp_ntz column (logical_type without a zone) has its
+    range widened by NTZ_SLACK_US.  Driver bytes are O(chunks): the
+    predicate columns' stats_json, ~1.3 kB per chunk-column for a
+    313-row url bloom, at most ~32 kB (the hex of a BLOOM_MAX_M
+    bitmap).  `kept_bytes` is the kept chunks' `encoded_bytes` over
+    the columns `sized`, read in the same pyarrow pass (None on the
+    Spark path, `files` None).
     """
     probes = {}
     for col, v in (eq or {}).items():
@@ -232,9 +257,11 @@ def _footer_verdicts(chunks: DataFrame, files: list | None,
     if not cols:
         return None
     rows = _footer_rows(chunks, files, cols, sized)
-    dtypes = {}
+    dtypes, ntz = {}, set()
     for r in rows:
         dtypes.setdefault(r[1], int(r[2]))
+        if r[4] == LT_TIMESTAMP_US:  # no zone: timestamp_ntz
+            ntz.add(r[1])
     missing = [c for c in cols if c not in dtypes]
     if missing:
         raise ValueError(
@@ -245,6 +272,8 @@ def _footer_verdicts(chunks: DataFrame, files: list | None,
         for v in vals:
             _check_probe_type(dtypes[col], v, col)
         tests[col] = [_eq_probe(v) for v in vals]
+    ranges = {c: _ntz_loose(*b) if c in ntz else b
+              for c, b in ranges.items()}
     kept, dropped = set(), set()
     for cid, col, _, stats_json, *_ in rows:
         if col not in cols:
@@ -256,18 +285,19 @@ def _footer_verdicts(chunks: DataFrame, files: list | None,
         (kept if ok else dropped).add(cid)
     kept -= dropped
     kept_bytes = None if files is None else sum(
-        r[4] for r in rows if r[1] in sized and r[0] in kept)
+        r[5] for r in rows if r[1] in sized and r[0] in kept)
     return sorted(kept), sorted(dropped), kept_bytes
 
 
 def _footer_rows(chunks: DataFrame, files: list | None, cols: list,
                  sized: list | tuple) -> list:
-    """(chunk_id, column, dtype_code, stats_json) footer rows of the
-    columns `cols`: one Spark job, a plain projection (no aggregation,
-    shuffle or broadcast); or, for a local `read_chunks` frame's
-    `files`, one pyarrow read (no job) of the rows of `cols` and
-    `sized`, each with its `encoded_bytes` appended."""
-    fields = ["chunk_id", "column", "dtype_code", "stats_json"]
+    """(chunk_id, column, dtype_code, stats_json, logical_type) footer
+    rows of the columns `cols`: one Spark job, a plain projection (no
+    aggregation, shuffle or broadcast); or, for a local `read_chunks`
+    frame's `files`, one pyarrow read (no job) of the rows of `cols`
+    and `sized`, each with its `encoded_bytes` appended."""
+    fields = ["chunk_id", "column", "dtype_code", "stats_json",
+              "logical_type"]
     if files is None:
         return (chunks.filter(F.col("column").isin(cols))
                 .select(*fields).collect())
@@ -296,7 +326,8 @@ def _check_probe_type(dt: int, value, column: str) -> None:
 
 def _eq_probe(value) -> tuple:
     """(exact-list stat key, member or None if no list can hold it,
-    bloom hashes (c1, c2)) of one eq probe."""
+    bloom hashes (c1, c2)) of one eq probe; a key of None (a probe
+    that is neither an int nor a string) keeps every chunk."""
     if value is None:
         raise ValueError("eq pruning: probing for NULL is not "
                          "supported (validity lives outside eq stats)")
@@ -304,8 +335,10 @@ def _eq_probe(value) -> tuple:
         raise ValueError("eq pruning: probe booleans as ints (0/1)")
     if isinstance(value, int):
         # dvset_i is only written for int64-representable domains
-        member = value if -(1 << 63) <= value < (1 << 63) else None
+        member = value if _I64_MIN <= value <= _I64_MAX else None
         return "dvset_i", member, int_hashes(value)
+    if not isinstance(value, (str, bytes, bytearray)):
+        return None, None, None  # eq stats hold only ints and strings
     vb = value.encode("utf-8") if isinstance(value, str) else bytes(value)
     try:
         member = vb.decode("utf-8")
@@ -318,12 +351,28 @@ def _eq_probe(value) -> tuple:
 def _may_contain(stats: dict, probe: tuple) -> bool:
     """May the chunk contain the probe?  No eq stats → kept."""
     key, member, hashes = probe
+    if key is None:
+        return True
     if stats.get(key) is not None:
         return member is not None and member in stats[key]
     if stats.get("bloom") is not None and stats.get("bloom_m") is not None:
         return bloom_hex_test(stats["bloom"], int(stats["bloom_m"]),
                               *hashes)
     return True
+
+
+# Spark reads a timestamp_ntz value as wall-clock time in the session
+# time zone, whose UTC offset lies within ±18 h (java.time.ZoneOffset):
+# an epoch-µs range widened by this much holds every match in any zone
+NTZ_SLACK_US = 18 * 3600 * 10 ** 6
+
+
+def _ntz_loose(lo, hi) -> tuple:
+    """An epoch-µs range [lo, hi] widened to hold the wall-clock µs
+    (what a timestamp_ntz zone map holds) of every value that Spark's
+    `unix_micros(col.cast("timestamp"))` puts in it."""
+    return (None if lo is None else lo - NTZ_SLACK_US,
+            None if hi is None else hi + NTZ_SLACK_US)
 
 
 def _overlaps(stats: dict, lo, hi) -> bool:
@@ -352,7 +401,7 @@ def decode_table(chunks: DataFrame, columns: list[str],
     if contiguous:
         return _decode_table_contiguous(chunks, columns, spark_schema)
 
-    ts_tz, expected = _rebuild_types(chunks.sparkSession, spark_schema)
+    expected = _expected_arrow_types(_parse_datatype_string(spark_schema))
 
     # applyInArrow (not applyInPandas): pandas float columns cannot
     # represent NaN-the-value distinctly from null, which would turn
@@ -367,32 +416,18 @@ def decode_table(chunks: DataFrame, columns: list[str],
                     "payload")
             .groupBy("chunk_id")
             .applyInArrow(
-                lambda tbl: _rebuild(tbl, columns, ts_tz, expected),
+                lambda tbl: _rebuild(tbl, columns, expected),
                 spark_schema))
 
 
-def _rebuild_types(spark, spark_schema: str) -> tuple[dict, dict]:
-    """(per-column arrow timestamp type, expected arrow types) that
-    `_rebuild` needs.  Spark quirk: applyInArrow and createDataFrame
-    take timestamp[us, tz=<session tz>] for TimestampType fields but
-    naive timestamp[us] for NTZ fields; attaching/stripping the tz is
-    metadata-only (values stay epoch-µs)."""
-    from pyspark.sql.types import TimestampType, _parse_datatype_string
-
-    session_tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    ts_tz = {f.name: pa.timestamp("us", tz=session_tz)
-             if isinstance(f.dataType, TimestampType)
-             else pa.timestamp("us")
-             for f in _parse_datatype_string(spark_schema).fields}
-    return ts_tz, _expected_arrow_types(spark_schema)
-
-
-def _rebuild(tbl: pa.Table, columns: list[str], ts_tz: dict,
-             expected: dict) -> pa.Table:
+def _rebuild(tbl: pa.Table, columns: list[str], expected: dict) -> pa.Table:
     """One chunk's rows of `columns` from its stored column rows
     (`column`, `payload`, `logical_type`, `validity`) — the per-chunk
     kernel of the grouped `decode_table` and of the driver-local
-    `scan_encoded`."""
+    `scan_encoded`.  `expected` is `_expected_arrow_types`: applyInArrow
+    and createDataFrame take timestamp[us, tz=UTC] for TimestampType
+    and naive timestamp[us] for NTZ, whatever the session time zone
+    (attaching/stripping the tz is metadata-only)."""
     d = tbl.to_pydict()
     arrays = {}
     for col, payload, logical, validity in zip(
@@ -400,11 +435,59 @@ def _rebuild(tbl: pa.Table, columns: list[str], ts_tz: dict,
         values, _, dt = B.decode_blob(payload)
         arr = _cast_narrow(values_to_arrow(
             values, dt, logical, bytes(validity or b"")))
-        if pa.types.is_timestamp(arr.type):
-            arr = arr.cast(ts_tz[col])
         _check_decoded_type(col, arr, expected)
+        if pa.types.is_timestamp(arr.type):
+            arr = arr.cast(expected[col])
         arrays[col] = arr
     return pa.table({c: arrays[c] for c in columns})
+
+
+_INT_TYPES = (ByteType, ShortType, IntegerType, LongType)
+
+
+def _is_int64(v) -> bool:
+    return type(v) is int and _I64_MIN <= v <= _I64_MAX
+
+
+def _prefilter(tbl, schema: StructType, eq: dict, ranges: dict):
+    """The rows of one decoded chunk (a table or record batch) that
+    may pass `scan_encoded`'s residual filter for `eq`/`ranges`: a
+    superset of what Spark keeps, so fewer rows cross into the JVM.
+    Spark's filter still decides which rows are returned.
+
+    A predicate is tested only where Arrow and Spark agree exactly:
+    integer columns (tinyint..bigint) against int probes, IN-lists and
+    range bounds within int64, compared as int64; `timestamp` ranges
+    against the stored epoch-µs; and default-collation `string`
+    columns against str probes and IN-lists.  Every other predicate
+    keeps all rows: float/double (Spark's NaN equals NaN and sorts
+    above every value; Arrow's does neither), timestamp_ntz (Spark
+    reads it in the session zone), binary, boolean, decimal, date,
+    nested and collated types, mismatched probe types, ints outside
+    int64.  A NULL value fails any tested predicate, as in Spark.
+    """
+    masks = []
+    for col, v in eq.items():
+        dt = schema[col].dataType
+        probes = list(v) if isinstance(v, (list, tuple, set)) else [v]
+        if isinstance(dt, _INT_TYPES) and all(map(_is_int64, probes)):
+            masks.append(pc.is_in(pc.cast(tbl[col], pa.int64()),
+                                  value_set=pa.array(probes, pa.int64())))
+        elif (type(dt) is StringType and dt.collation == "UTF8_BINARY"
+              and all(type(p) is str for p in probes)):
+            masks.append(pc.is_in(tbl[col],
+                                  value_set=pa.array(probes, pa.string())))
+    for col, (lo, hi) in ranges.items():
+        dt = schema[col].dataType
+        if not (isinstance(dt, (*_INT_TYPES, TimestampType))
+                and all(b is None or _is_int64(b) for b in (lo, hi))):
+            continue
+        values = pc.cast(tbl[col], pa.int64())
+        if lo is not None and lo > _I64_MIN:
+            masks.append(pc.greater_equal(values, lo))
+        if hi is not None and hi < _I64_MAX:
+            masks.append(pc.less_equal(values, hi))
+    return tbl.filter(reduce(pc.and_, masks)) if masks else tbl
 
 
 def _cast_narrow(arr: pa.Array) -> pa.Array:
@@ -416,12 +499,10 @@ def _cast_narrow(arr: pa.Array) -> pa.Array:
     return arr
 
 
-def _expected_arrow_types(spark_schema: str) -> dict:
+def _expected_arrow_types(schema: StructType) -> dict:
     from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import _parse_datatype_string
 
-    return {f.name: to_arrow_type(f.dataType)
-            for f in _parse_datatype_string(spark_schema).fields}
+    return {f.name: to_arrow_type(f.dataType) for f in schema.fields}
 
 
 def _check_decoded_type(col: str, arr: pa.Array, expected: dict) -> None:
@@ -449,7 +530,7 @@ def _decode_table_contiguous(chunks: DataFrame, columns: list[str],
     kernel), emit one original-schema batch per chunk."""
     need = set(columns)
 
-    expected = _expected_arrow_types(spark_schema)
+    expected = _expected_arrow_types(_parse_datatype_string(spark_schema))
 
     def fn(batch_iter):
         pending: dict = {}
@@ -521,20 +602,24 @@ def push_chunk_filter(chunks: DataFrame, pruned: DataFrame,
 
 
 def _decode_local(spark, files: list, columns: list[str],
-                  spark_schema: str, kept: list) -> DataFrame:
+                  schema: StructType, kept: list, eq: dict,
+                  ranges: dict) -> DataFrame:
     """The chunks `kept` of a local `read_chunks` frame with data files
-    `files`, read with pyarrow and decoded on the driver into a local
-    DataFrame (0 jobs)."""
+    `files`, read with pyarrow, decoded on the driver and each cut down
+    by `_prefilter` to the rows that may pass `eq`/`ranges`, as a
+    local DataFrame (0 jobs): only those rows cross into the JVM."""
     stored = read_local(files, columns, ["chunk_id", "column", "payload",
                                          "logical_type", "validity"], kept)
-    ts_tz, expected = _rebuild_types(spark, spark_schema)
-    parts = [_rebuild(stored.filter(pc.equal(stored["chunk_id"], cid)),
-                      columns, ts_tz, expected)
+    expected = _expected_arrow_types(schema)
+    parts = [_prefilter(_rebuild(stored.filter(pc.equal(stored["chunk_id"],
+                                                        cid)),
+                                 columns, expected),
+                        schema, eq, ranges)
              for cid in pc.unique(stored["chunk_id"]).to_pylist()]
-    schema = pa.schema(list(expected.items()))
-    table = (pa.concat_tables(parts).select(schema.names) if parts
-             else schema.empty_table())
-    return spark.createDataFrame(table, spark_schema)
+    arrow_schema = pa.schema(list(expected.items()))
+    table = (pa.concat_tables(parts).select(arrow_schema.names) if parts
+             else arrow_schema.empty_table())
+    return spark.createDataFrame(table, schema)
 
 
 def scan_encoded(chunks: DataFrame, columns: list[str],
@@ -547,9 +632,10 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
     `eq`: {column: value} equality predicates (a list, tuple or set
     value is an IN-list); `ranges`: {column: (lo, hi)} inclusive
     numeric ranges (either bound may be None; timestamps compare in
-    epoch-µs).  Each predicate first prunes whole chunks from footer
-    stats (prune_chunks_multi's verdicts, one footer job), then
-    re-applies itself as an exact residual row filter on the decoded
+    epoch-µs, a timestamp_ntz value read in the session time zone).
+    Each predicate first prunes whole chunks from footer stats
+    (prune_chunks_multi's verdicts, one footer job), then applies
+    itself as one exact residual Spark filter over the decoded
     survivors, so the result equals a plain decode-then-filter.  When
     a chunk is dropped, the kept ids filter the scan as a parquet-
     pushed `chunk_id IN (...)`, so the dropped payload bytes are not
@@ -564,11 +650,14 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
     and the kept chunks' payloads over `columns` total at most
     LOCAL_READ_BYTES encoded bytes (read in the same footer pass) they
     are read with pyarrow and decoded on the driver by the same
-    per-chunk `_rebuild`; the result is `spark.createDataFrame`, whose
-    residual filters Spark folds into a local relation, so collecting
-    a lookup runs 0 Spark jobs.  Every other read — a derived, in-
-    session or non-`file:` frame, a scan that skips nothing, or a kept
-    set over the bound — is decoded by Spark (`decode_table`).
+    per-chunk `_rebuild`, each chunk cut down in Arrow by `_prefilter`
+    (a superset of the matching rows, for the types where Arrow and
+    Spark compare alike); the surviving rows become
+    `spark.createDataFrame`, whose residual filter Spark folds into a
+    local relation, so collecting a lookup runs 0 Spark jobs.  Every
+    other read — a derived, in-session or non-`file:` frame, a scan
+    that skips nothing, or a kept set over the bound — is decoded by
+    Spark (`decode_table`), whole chunks into the residual filter.
 
     `contiguous` defaults to False because the primary use case is a
     store read back from parquet, where file splits break chunk
@@ -582,33 +671,38 @@ def scan_encoded(chunks: DataFrame, columns: list[str],
         raise ValueError(f"scan_encoded: predicate columns "
                          f"{sorted(missing)} must be in `columns` "
                          f"(the residual filter needs them decoded)")
+    schema = _parse_datatype_string(spark_schema)
     files = local_files(chunks)
     verdicts = _footer_verdicts(chunks, files, eq, ranges, sized=columns)
     if verdicts is None or not verdicts[1]:
         d = decode_table(chunks, columns, spark_schema,
                          contiguous=contiguous)
     elif verdicts[2] is not None and verdicts[2] <= LOCAL_READ_BYTES:
-        d = _decode_local(chunks.sparkSession, files, columns,
-                          spark_schema, verdicts[0])
+        d = _decode_local(chunks.sparkSession, files, columns, schema,
+                          verdicts[0], eq, ranges)
     else:
         d = decode_table(chunks.filter(F.col("chunk_id").isin(verdicts[0])),
                          columns, spark_schema, contiguous=contiguous)
+    residual = _residual(schema, eq, ranges)
+    return d if residual is None else d.filter(residual)
 
+
+def _residual(schema: StructType, eq: dict, ranges: dict):
+    """The AND of `scan_encoded`'s exact row predicates as one Column
+    (None without predicates): `isin` for an IN-list, `== lit` for a
+    value, and ranges over `unix_micros(col.cast("timestamp"))` for
+    timestamp columns."""
     def as_num(col):
-        from pyspark.sql.types import TimestampNTZType, TimestampType
-
-        if isinstance(d.schema[col].dataType,
+        if isinstance(schema[col].dataType,
                       (TimestampType, TimestampNTZType)):
             return F.unix_micros(F.col(col).cast("timestamp"))
         return F.col(col)
 
-    for col, v in eq.items():
-        d = d.filter(F.col(col).isin(list(v))
-                     if isinstance(v, (list, tuple, set))
-                     else F.col(col) == F.lit(v))
+    preds = [F.col(col).isin(list(v)) if isinstance(v, (list, tuple, set))
+             else F.col(col) == F.lit(v) for col, v in eq.items()]
     for col, (lo, hi) in ranges.items():
         if lo is not None:
-            d = d.filter(as_num(col) >= F.lit(lo))
+            preds.append(as_num(col) >= F.lit(lo))
         if hi is not None:
-            d = d.filter(as_num(col) <= F.lit(hi))
-    return d
+            preds.append(as_num(col) <= F.lit(hi))
+    return reduce(and_, preds) if preds else None

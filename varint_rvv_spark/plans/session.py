@@ -19,8 +19,8 @@ DEFAULT_BATCH_ROWS = 65536  # the LMUL/window-size analogue (SURVEY §4)
 # below every explode; predicate pushdown then inlines the full array
 # expression into that filter, so an explode over a computed array
 # (shingles, grams) re-evaluates its builder 2-3x per row — measured 3x
-# on the k=5 shingle pipeline (19.0 s vs 6.5 s for one evaluation,
-# plans/r06).  Explode itself already skips empty/null arrays, and every
+# on the k=5 shingle pipeline (19.0 s vs 6.5 s for one evaluation;
+# OPTIMIZATION_r06.md finding 1).  Explode itself already skips empty/null arrays, and every
 # generate in this engine is over a map-side computed array where the
 # inferred filter prunes nothing earlier than the generate does, so the
 # rule is pure loss here (optimization-guide §4.4 duplication, built-in
