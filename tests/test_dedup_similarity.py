@@ -400,8 +400,8 @@ def test_ngram_decontaminate_semantics_and_plan(spark):
     """Planted contamination: a corpus doc embedding a benchmark
     5-gram is flagged with exact hit counts; clean and too-short docs
     are absent.  The corpus side is ONE map stage (r6 Arrow kernel —
-    no Exchange at all: the benchmark shingle set travels as a task
-    broadcast and un-matched corpus rows never shuffle)."""
+    no Exchange at all: the benchmark shingle set travels in the
+    kernel's closure and un-matched corpus rows never shuffle)."""
     from varint_rvv_spark.operators.dedup import ngram_decontaminate
 
     bench = spark.createDataFrame(
@@ -463,6 +463,36 @@ def test_ngram_decontaminate_kernel_matches_join_form(spark):
         a = sorted(map(tuple, got.collect()))
         b = sorted(map(tuple, ref.collect()))
         assert a == b, f"k={k}: kernel and join forms diverge"
+
+
+def test_ngram_decontaminate_makes_no_explicit_broadcast(spark,
+                                                         monkeypatch):
+    """The benchmark shingle set rides in the kernel's closure: two
+    calls create no SparkContext.broadcast, which nothing would
+    destroy, and give the same rows."""
+    from pyspark import SparkContext
+
+    from varint_rvv_spark.operators.dedup import ngram_decontaminate
+
+    made = []
+    real = SparkContext.broadcast
+
+    def counting(self, value):
+        made.append(value)
+        return real(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting)
+    bench = spark.createDataFrame(
+        [(100, "alpha beta gamma delta epsilon zeta eta")],
+        "doc_id long, text string")
+    docs = spark.createDataFrame(
+        [(0, "prefix alpha beta gamma delta epsilon zeta tail"),
+         (1, "nothing from the benchmark in this one at all")],
+        "doc_id long, text string")
+    runs = [sorted(map(tuple, ngram_decontaminate(
+        docs, bench, "doc_id", "text", k=5).collect())) for _ in range(2)]
+    assert runs[0] == runs[1] == [(0, 4, 2)]
+    assert made == []
 
 
 def test_minhash_signatures_arrow_matches_expression_form(spark):

@@ -445,3 +445,45 @@ def test_footer_topk_exact_beyond_double_precision(spark):
     # entirely on a clustered store
     assert cand.count() < 640
     chunks.unpersist()
+
+
+def test_footer_range_agg_timestamp_ntz_under_a_non_utc_session(spark):
+    """A timestamp_ntz range column's zone maps hold wall-clock µs while
+    the bounds, like the residual `unix_micros(col.cast("timestamp"))`,
+    are epoch-µs: under Asia/Tokyo a chunk must be judged with the
+    zone slack (overlap widened, interior narrowed), or matching rows
+    are skipped and non-matching ones counted.  Checked against
+    decode-then-filter for a narrow and a wide range."""
+    import datetime as dt
+
+    from varint_rvv_spark.operators.decode import decode_table
+    from varint_rvv_spark.operators.encode import encode_chunks_range
+    from varint_rvv_spark.operators.footer_stats import footer_range_agg
+
+    t0 = dt.datetime(2024, 1, 1)
+    t0_us = 1_704_067_200_000_000   # t0 as epoch-µs in UTC
+    step = 10 * 60 * 10 ** 6        # one row per 10 minutes
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        df = spark.createDataFrame(
+            [(k, t0 + dt.timedelta(minutes=10 * k)) for k in range(1000)],
+            "val long, w timestamp_ntz")
+        chunks = encode_chunks_range(df, ["w"], num_partitions=1,
+                                     rows_per_chunk=50).cache()
+        decoded = decode_table(chunks, ["val", "w"],
+                               "val long, w timestamp_ntz")
+        epoch = F.unix_micros(F.col("w").cast("timestamp"))
+        for lo_k, hi_k in ((100, 300), (150, 900)):
+            lo, hi = t0_us + lo_k * step, t0_us + hi_k * step
+            got = footer_range_agg(chunks, "val", "w", lo, hi) \
+                .collect()[0]
+            exp = (decoded.filter((epoch >= lo) & (epoch <= hi))
+                   .agg(F.count("*"), F.sum("val")).collect()[0])
+            assert (got.n_rows, got.total) == (exp[0], exp[1]), (lo_k,
+                                                                  hi_k)
+            # Tokyo is UTC+9: wall clock = epoch + 9 h = 54 rows later
+            assert exp[0] == min(hi_k + 54, 999) - (lo_k + 54) + 1
+        chunks.unpersist()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)

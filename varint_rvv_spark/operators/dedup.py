@@ -376,10 +376,13 @@ def ngram_decontaminate(docs: DataFrame, bench: DataFrame,
     distinct shingles, and probes the benchmark set with one hashed
     is_in per dictionary.  The benchmark side is tiny by construction
     (eval suites, not corpora): its distinct-shingle set is collected
-    once (Arrow transfer) and broadcast to the workers — the same
-    driver/executor footprint the previous BroadcastHashJoin build
-    carried, minus the per-corpus-row probe and the hits groupBy
-    exchange (the kernel emits final per-doc rows directly).  Docs
+    once (Arrow transfer) and rides in the kernel's closure — PySpark
+    ships a command over spark.broadcast.UDFCompressionThreshold as a
+    broadcast tied to the plan, so no explicit broadcast outlives the
+    call.  The same driver/executor footprint the previous
+    BroadcastHashJoin build carried, minus the per-corpus-row probe
+    and the hits groupBy exchange (the kernel emits final per-doc rows
+    directly).  Docs
     with fewer than k tokens have no shingles and cannot be flagged.
     Results are row-identical to the join+groupBy form (test-locked).
     """
@@ -405,7 +408,6 @@ def ngram_decontaminate(docs: DataFrame, bench: DataFrame,
     bench_vals = (bsrc.mapInArrow(bench_fn, "shingle string")
                   .toArrow().column("shingle").combine_chunks()
                   .unique())
-    bc = docs.sparkSession.sparkContext.broadcast(bench_vals)
 
     schema = (f"{id_col} {docs.schema[id_col].dataType.simpleString()},"
               f" n_shingles long, n_contaminated long")
@@ -414,7 +416,6 @@ def ngram_decontaminate(docs: DataFrame, bench: DataFrame,
         import numpy as np
         import pyarrow.compute as pc
 
-        bset = bc.value
         for batch in batch_iter:
             if batch.num_rows == 0:
                 continue
@@ -430,7 +431,7 @@ def ngram_decontaminate(docs: DataFrame, bench: DataFrame,
             udoc, ucode = uk // nd, uk % nd
             seg = np.flatnonzero(np.r_[True, udoc[1:] != udoc[:-1]])
             n_sh = np.diff(np.r_[seg, len(uk)])
-            in_set = pc.is_in(codes.dictionary, value_set=bset) \
+            in_set = pc.is_in(codes.dictionary, value_set=bench_vals) \
                 .to_numpy(zero_copy_only=False)
             n_hit = np.add.reduceat(
                 in_set[ucode].astype(np.int64), seg)

@@ -408,6 +408,21 @@ def encode_chunks_scan(df: DataFrame, columns: list[str] | None = None,
     worth it.  chunk_id = (scan partition, ordinal): deterministic for
     a fixed file layout + spark.sql.files.maxPartitionBytes.
 
+    Batch source: when the projected input is a bare local parquet
+    scan (`sources.tables.direct_read_splits`: attribute-only projects
+    over a parquet relation without filters or partition columns, each
+    planned split one whole `file:` file, flat types pyarrow reads as
+    Spark would send them), the Python tasks read Spark's planned
+    splits themselves — `spark.range(n, numPartitions=n).mapInArrow`,
+    task i reading partition i's files in order with pyarrow — and
+    compute the same chunk ids as `with_scan_chunk_ids` (partition i,
+    row counted across the partition's files).  Input rows then never
+    pass through Spark's row-to-Arrow writer; chunk rows, the output
+    file count and `scan_layout_fingerprint` are those of the Spark
+    path, so a store written by either path resumes under the other.
+    The splits are fixed when this is called (the fingerprint is too).
+    Any other input, and any resume, reads through Spark.
+
     Resume: pass the previous run's footer as `done_footer` — finished
     chunks are skipped with the SAME broadcast left_anti join hash mode
     uses (no driver-side collect of chunk ids: at 100 TB / 64 MB chunks
@@ -426,6 +441,17 @@ def encode_chunks_scan(df: DataFrame, columns: list[str] | None = None,
     projected = df.select(*columns)
     fp = scan_layout_fingerprint(projected, rows_per_chunk)
     fp_slot = -2 - fp if fp is not None else -1
+    kernel = _encode_kernel(columns, codec_overrides, fp_slot)
+    if done_footer is None and done_chunk_ids is None:
+        from ..sources.tables import direct_read_splits
+
+        direct = direct_read_splits(projected)
+        if direct is not None:
+            splits, schema = direct
+            return df.sparkSession.range(
+                0, len(splits), 1, len(splits)).mapInArrow(
+                _read_splits(splits, schema, rows_per_chunk, kernel),
+                CHUNK_SPARK_SCHEMA)
     if done_footer is not None:
         if done_chunk_ids is not None:
             raise ValueError("pass done_footer or done_chunk_ids, "
@@ -459,9 +485,44 @@ def encode_chunks_scan(df: DataFrame, columns: list[str] | None = None,
         done = df.sparkSession.createDataFrame(ids, f"{CHUNK_ID} long")
     if done is not None:
         keyed = keyed.join(F.broadcast(done), CHUNK_ID, "left_anti")
-    return keyed.mapInArrow(
-        _encode_kernel(columns, codec_overrides, fp_slot),
-        CHUNK_SPARK_SCHEMA)
+    return keyed.mapInArrow(kernel, CHUNK_SPARK_SCHEMA)
+
+
+def _read_splits(splits: list, schema: pa.Schema, rows_per_chunk: int,
+                 kernel):
+    """Direct-read batch source in front of `kernel`, for a mapInArrow
+    over `range(len(splits))` with one id per partition: task i reads
+    the files of scan partition i in order, casts each batch to
+    `schema` and appends `with_scan_chunk_ids`'s chunk id, the row
+    counted across the partition's files."""
+    def batches(pid, paths):
+        import pyarrow.parquet as pq
+
+        row = 0
+        for path in paths:
+            with pq.ParquetFile(path) as f:
+                for b in f.iter_batches(columns=schema.names):
+                    if not b.num_rows:
+                        continue
+                    ordinal = (row + np.arange(b.num_rows)) // rows_per_chunk
+                    if ordinal[-1] >= 1_000_000:
+                        raise ValueError(
+                            f"scan partition exceeds 10^6 chunks at "
+                            f"rows_per_chunk={rows_per_chunk}; raise "
+                            f"rows_per_chunk or repartition")
+                    row += b.num_rows
+                    yield pa.RecordBatch.from_arrays(
+                        [b.column(i).cast(t)
+                         for i, t in enumerate(schema.types)]
+                        + [pa.array(pid * 1_000_000 + ordinal)],
+                        names=schema.names + [CHUNK_ID])
+
+    def fn(batch_iter):
+        for ids in batch_iter:
+            for pid in ids.column(0).to_pylist():
+                yield from kernel(batches(pid, splits[pid]))
+
+    return fn
 
 
 def zorder_expr(bucket_cols: list, bits: int = 8):

@@ -181,7 +181,10 @@ def footer_range_agg(chunks: DataFrame, value_col: str,
     `contiguous` follows decode_table's default (False): chunks read
     back from a parquet store lose chunk adjacency across file splits;
     pass True only on a fresh in-session encode lineage.
-    Timestamps compare in epoch-µs.
+    Timestamps compare in epoch-µs; a timestamp_ntz column, whose zone
+    maps hold wall-clock µs, means its wall clock in the session zone
+    (as `unix_micros(col.cast("timestamp"))` does), so its chunks are
+    judged with `decode.NTZ_SLACK_US` of slack.
 
     Returns one row: (n_rows bigint, total bigint).
     """
@@ -190,7 +193,8 @@ def footer_range_agg(chunks: DataFrame, value_col: str,
     from decimal import ROUND_CEILING, ROUND_FLOOR, Decimal
 
     from ..codecs import blob as B
-    from .decode import decode_table
+    from .arrow_bridge import LT_TIMESTAMP_US
+    from .decode import NTZ_SLACK_US, _ntz_loose, decode_table
     from .evolve import _stored_spark_type
 
     def _as_date(x) -> _dt.date:
@@ -320,16 +324,26 @@ def footer_range_agg(chunks: DataFrame, value_col: str,
             f"footer_range_agg: value column {value_col!r} stores "
             f"logical type {cov.v_lt!r}, whose footer vsum is not in "
             f"decoded-value units — decode and aggregate instead")
+    in_lo, in_hi, ov_lo, ov_hi = lo_b, hi_b, lo_b, hi_b
+    if r_lt == LT_TIMESTAMP_US:
+        # timestamp_ntz: zone maps hold wall-clock µs, the bounds (and
+        # the residual's unix_micros) epoch-µs in the session zone —
+        # a chunk may match within the largest zone offset of the
+        # range, and lies inside it only with that slack to spare
+        lo_i, hi_i = int(math.ceil(lo)), int(math.floor(hi))
+        ov_lo, ov_hi = (F.lit(b) for b in _ntz_loose(lo_i, hi_i))
+        in_lo = F.lit(lo_i + NTZ_SLACK_US)
+        in_hi = F.lit(hi_i - NTZ_SLACK_US)
     # NULL range rows never match, so `interior` (every row matches)
     # needs a chunk without a validity bitmap on range_col
     no_nulls = F.coalesce(F.length("validity"), F.lit(0)) == 0
     interior = (vmin.isNotNull() & vmax.isNotNull()
-                & (vmin >= lo_b) & (vmax <= hi_b) & no_nulls)
+                & (vmin >= in_lo) & (vmax <= in_hi) & no_nulls)
     # overlap stays conservative: null stats → kept (decode path);
     # [vmin, vmax] spans the valid rows only, and NULL range rows
     # never match, so a chunk outside it holds no matching row
-    overlap = ((vmax.isNull() | (vmax >= lo_b))
-               & (vmin.isNull() | (vmin <= hi_b)))
+    overlap = ((vmax.isNull() | (vmax >= ov_lo))
+               & (vmin.isNull() | (vmin <= ov_hi)))
     interior_ids = rc.filter(interior).select("chunk_id")
     overlap_ids = rc.filter(overlap).select("chunk_id")
     vsum = F.get_json_object("stats_json", "$.vsum").cast("long")

@@ -12,18 +12,42 @@ A `read_chunks` frame of the whole store is tagged with its root; while
 its data files are local, `local_files` + `read_local` give the driver
 pyarrow reads of exactly the files the frame lists (the lookup path of
 operators/decode.py).
+
+On the input side, `direct_read_splits` tells when pyarrow can read a
+frame's rows itself: for a bare local parquet scan it returns the files
+of each partition Spark planned (the direct-read scan encode of
+operators/encode.py).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
+from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType, _parse_datatype_string
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _parse_datatype_string,
+)
 
 from ..operators.encode import (
     CHUNK_ARROW_SCHEMA,
@@ -116,13 +140,168 @@ def local_files(chunks: DataFrame) -> list[str] | None:
     """
     if vars(chunks).get("_store_root") is None:
         return None
-    paths = []
-    for uri in chunks.inputFiles():
-        url = urlparse(uri)
-        if url.scheme != "file":
+    paths = [_local_path(uri) for uri in chunks.inputFiles()]
+    return None if None in paths else paths
+
+
+def _local_path(uri: str) -> str | None:
+    url = urlparse(uri)
+    return unquote(url.path) if url.scheme == "file" else None
+
+
+# Spark types whose Arrow form pyarrow's parquet reader yields as is
+# (timestamps up to unit and zone, which cast exactly); other types
+# (nested, intervals, variants) keep Spark's reader
+_FLAT_TYPES = (BooleanType, ByteType, ShortType, IntegerType, LongType,
+               FloatType, DoubleType, StringType, BinaryType, DateType,
+               DecimalType, TimestampType, TimestampNTZType)
+# reader options that only choose which files are listed; the planned
+# splits already reflect them
+_LISTING_OPTIONS = {"path", "paths", "basepath", "mergeschema",
+                    "pathglobfilter", "recursivefilelookup",
+                    "modifiedbefore", "modifiedafter"}
+_SPARK_VERSION = b"org.apache.spark.version"
+_LEGACY_KEYS = (b"org.apache.spark.legacyDateTime",
+                b"org.apache.spark.legacyINT96")
+_split_json = {}   # py4j gateway -> ObjectMapper of planned partitions
+
+
+def _partitions_json(spark: SparkSession, parts) -> list:
+    """Spark's planned FilePartitions as JSON, in one JVM call: jackson's
+    Scala module writes the case classes field by field, SparkPath as
+    its URI string.  The mapper is built once per gateway."""
+    gw = spark.sparkContext._gateway
+    mapper = _split_json.get(gw)
+    if mapper is None:
+        jackson = spark._jvm.com.fasterxml.jackson
+        paths = jackson.databind.module.SimpleModule()
+        paths.addSerializer(
+            spark._jvm.java.lang.Class.forName(
+                "org.apache.spark.paths.SparkPath"),
+            getattr(jackson.databind.ser.std.ToStringSerializer,
+                    "instance"))
+        mapper = jackson.databind.ObjectMapper()
+        mapper.registerModule(getattr(getattr(
+            jackson.module.scala, "DefaultScalaModule$"), "MODULE$"))
+        mapper.registerModule(paths)
+        _split_json[gw] = mapper
+    return json.loads(mapper.writeValueAsString(parts))
+
+
+def _bare_parquet_scan(df: DataFrame):
+    """The FileSourceScanExec of `df` when its analyzed plan is
+    attribute-only Projects over a non-streaming parquet relation with
+    no partition columns, no buckets and only file-listing options;
+    else None.  Planning only, no job."""
+    qe = df._jdf.queryExecution()
+    node = qe.analyzed()
+    while node.nodeName() == "Project":
+        # an Alias (rename or expression) makes output differ
+        if not node.projectList().equals(node.output()):
             return None
-        paths.append(unquote(url.path))
-    return paths
+        node = node.child()
+    if (node.getClass().getSimpleName() != "LogicalRelation"
+            or node.isStreaming()):
+        return None
+    rel = node.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"
+            or rel.partitionSchema().length()
+            or rel.bucketSpec().isDefined()
+            or set(rel.options().keys().mkString("\n").split("\n"))
+            - _LISTING_OPTIONS - {""}):
+        return None
+    leaves = qe.executedPlan().collectLeaves()
+    scan = leaves.head() if leaves.length() == 1 else None
+    if (scan is None
+            or scan.getClass().getSimpleName() != "FileSourceScanExec"):
+        return None
+    return scan
+
+
+def direct_read_splits(df: DataFrame) -> tuple[list, pa.Schema] | None:
+    """(files per scan partition, Arrow schema) when pyarrow reading
+    those files gives exactly the batches Spark's scan of `df` sends a
+    Python kernel; else None, and Spark must read `df`.
+
+    The files are Spark's own planned splits (the FileScanRDD
+    partitions of `df`'s executed plan; no job), in partition and read
+    order.  Each split must be one whole local (`file:`) file, and the
+    frame a bare parquet scan (`_bare_parquet_scan`) of flat columns.
+    The schema is the Arrow type Spark sends for each column:
+    TimestampType in the session time zone.  Each file's footer must
+    hold every column by its exact name, with that type, or a
+    timestamp of the same zone-ness in ms or µs (an exact cast).
+    Spark would also read the files as stored: no corrupt- or
+    missing-file skipping, large var types off, and no calendar rebase
+    of dates or timestamps (a legacy-marked file, or a file without a
+    Spark version under a rebase mode other than CORRECTED).
+    """
+    import pyarrow.parquet as pq
+
+    spark = df.sparkSession
+    conf = spark.conf
+    if any(conf.get(k) == "true" for k in (
+            "spark.sql.files.ignoreCorruptFiles",
+            "spark.sql.files.ignoreMissingFiles",
+            "spark.sql.execution.arrow.useLargeVarTypes")):
+        return None
+    fields = df.schema.fields
+    if (not fields or len({f.name for f in fields}) < len(fields)
+            or not all(isinstance(f.dataType, _FLAT_TYPES)
+                       for f in fields)):
+        return None
+    tz = conf.get("spark.sql.session.timeZone")
+    schema = pa.schema([
+        (f.name, pa.timestamp("us", tz=tz)
+         if isinstance(f.dataType, TimestampType)
+         else to_arrow_type(f.dataType)) for f in fields])
+    try:
+        scan = _bare_parquet_scan(df)
+        if scan is None:
+            return None
+        parts = _partitions_json(spark, scan.inputRDD().partitions())
+    except Py4JError:  # a Spark build whose plan classes differ
+        return None
+    splits = []
+    for i, part in enumerate(parts):
+        paths = []
+        for f in part["files"]:
+            path = _local_path(f["filePath"])
+            if (path is None or f["start"] != 0
+                    or f["length"] != f["fileSize"]):
+                return None
+            paths.append(path)
+        if part["index"] != i:
+            return None
+        splits.append(paths)
+    temporal = any(pa.types.is_timestamp(t) or pa.types.is_date(t)
+                   for t in schema.types)
+    rebase = conf.get("spark.sql.parquet.datetimeRebaseModeInRead")
+    for path in {p for paths in splits for p in paths}:
+        stored = pq.read_schema(path)
+        meta = stored.metadata or {}
+        version = meta.get(_SPARK_VERSION)
+        if version is None:   # Spark takes the rebase mode from the conf
+            legacy = rebase != "CORRECTED"
+        else:
+            legacy = version < b"3" or any(k in meta for k in _LEGACY_KEYS)
+        if temporal and legacy:
+            return None
+        for want in schema:
+            i = stored.get_field_index(want.name)  # -1: absent or twice
+            if i < 0 or not _casts_exactly(stored.field(i).type, want.type):
+                return None
+    return splits, schema
+
+
+def _casts_exactly(got: pa.DataType, want: pa.DataType) -> bool:
+    if got == want:
+        return True
+    return (pa.types.is_timestamp(got) and pa.types.is_timestamp(want)
+            and got.unit in ("ms", "us")
+            and (got.tz is None) == (want.tz is None))
 
 
 def read_local(paths: list[str], columns: list[str], fields: list[str],
