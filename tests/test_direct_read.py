@@ -260,6 +260,18 @@ def test_fingerprint_lets_either_path_resume(spark, monkeypatch, tmp_path):
                   .collect()}
 
 
+@pytest.mark.parametrize("rows_per_chunk", [0, -5])
+def test_rows_per_chunk_below_one_is_refused(spark, tmp_path,
+                                             rows_per_chunk):
+    """Refused before any plan on both paths: 0 made the direct read put
+    a whole partition in one chunk, and a negative size gave negative
+    ordinals that collide with the previous partition's chunk ids."""
+    df = spark.read.parquet(_write_files(str(tmp_path / "in"), [30, 30]))
+    for frame in (df, df.filter(F.col("l") >= 0)):
+        with pytest.raises(ValueError, match="rows_per_chunk"):
+            encode_chunks_scan(frame, rows_per_chunk=rows_per_chunk)
+
+
 def test_ntz_and_ms_timestamps_cast_exactly(spark, monkeypatch, tmp_path):
     """Millisecond timestamps cast to µs exactly; a nanosecond column
     (INT96 or NANOS, which Spark converts) keeps the Spark path."""
@@ -287,3 +299,17 @@ def test_calendar_rebase_keeps_the_spark_path(spark, tmp_path, rebase):
         assert direct_read_splits(spark.read.parquet(src)) is None
         assert direct_read_splits(
             spark.read.parquet(src).select("l", "s")) is not None
+
+
+@pytest.mark.parametrize("key", ["spark.sql.files.ignoreCorruptFiles",
+                                 "spark.sql.files.ignoreMissingFiles",
+                                 "spark.sql.execution.arrow.useLargeVarTypes"])
+def test_skipping_and_large_var_confs_keep_the_spark_path(spark, tmp_path,
+                                                          key):
+    """pyarrow would fail on a file Spark skips, or send other string
+    types; Spark returns a conf as it was set, "TRUE" included."""
+    src = _write_files(str(tmp_path / "in"), [50])
+    for value in ("true", "TRUE"):
+        with confs(spark, {key: value}):
+            assert direct_read_splits(spark.read.parquet(src)) is None
+    assert direct_read_splits(spark.read.parquet(src)) is not None

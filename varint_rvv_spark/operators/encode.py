@@ -437,6 +437,12 @@ def encode_chunks_scan(df: DataFrame, columns: list[str] | None = None,
     available for tests/advanced callers and performs no layout
     validation.
     """
+    if rows_per_chunk < 1:
+        # 0 would put a whole partition in one chunk on the direct read
+        # and fail only inside a job on Spark's; a negative ordinal
+        # would collide with the previous partition's chunk ids
+        raise ValueError(f"rows_per_chunk must be >= 1, "
+                         f"got {rows_per_chunk}")
     columns = columns or df.columns
     projected = df.select(*columns)
     fp = scan_layout_fingerprint(projected, rows_per_chunk)

@@ -242,7 +242,8 @@ def direct_read_splits(df: DataFrame) -> tuple[list, pa.Schema] | None:
 
     spark = df.sparkSession
     conf = spark.conf
-    if any(conf.get(k) == "true" for k in (
+    # stored as set: Spark parses "TRUE" as true but returns it as is
+    if any(conf.get(k).lower() == "true" for k in (
             "spark.sql.files.ignoreCorruptFiles",
             "spark.sql.files.ignoreMissingFiles",
             "spark.sql.execution.arrow.useLargeVarTypes")):
