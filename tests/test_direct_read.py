@@ -1,14 +1,19 @@
-"""Direct-read scan encode: over a bare local parquet scan,
-encode_chunks_scan's Python tasks read Spark's planned splits with
-pyarrow.  The chunk rows, the layout fingerprint and the files written
-must equal the Spark path's (input rows sent through Spark's
-row-to-Arrow writer), and every other input must keep the Spark path."""
+"""Direct-read scan encode and direct-write sink: over a bare local
+parquet scan, encode_chunks_scan's Python tasks read Spark's planned
+splits with pyarrow, and write_encoded of that frame has its own tasks
+write the store files with pyarrow before the driver commits them.
+The chunk rows, the layout fingerprint and the files written must
+equal the Spark path's (input rows sent through Spark's row-to-Arrow
+writer, chunk rows through Spark's parquet writer), and every other
+input or frame must keep the Spark path."""
 
 import datetime as dt
 import os
 from contextlib import contextmanager
+from functools import partial
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -112,10 +117,25 @@ def _both(spark, monkeypatch, tmp_path, df, rows_per_chunk):
         return out
 
     assert files(tmp_path / "direct") == files(tmp_path / "spark")
+    # the direct write leaves no Hadoop sidecars and no staging
+    assert _sidecars(tmp_path / "direct") == 0 < _sidecars(tmp_path / "spark")
+    assert not os.path.exists(tmp_path / "direct" / "chunks" / "_temporary")
     stored = [_chunk_rows(read_chunks(spark, str(tmp_path / p)).select(
         *ROW_FIELDS)) for p in ("direct", "spark")]
     assert stored[0] == stored[1] == want
     return got
+
+
+def _sidecars(root) -> int:
+    """Hadoop `.crc` files under a store: Spark's writer leaves one per
+    file it writes, the direct write none."""
+    return sum(f.endswith(".crc") for _, _, fs in os.walk(root) for f in fs)
+
+
+def _listing(root) -> dict:
+    return {os.path.relpath(os.path.join(d, f), root):
+            os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(root) for f in fs}
 
 
 def test_pinned_one_file_per_split(spark, monkeypatch, tmp_path):
@@ -313,3 +333,325 @@ def test_skipping_and_large_var_confs_keep_the_spark_path(spark, tmp_path,
         with confs(spark, {key: value}):
             assert direct_read_splits(spark.read.parquet(src)) is None
     assert direct_read_splits(spark.read.parquet(src)) is not None
+
+
+def test_fingerprint_reads_sizes_under_escaped_paths(spark, tmp_path):
+    """Spark lists `file:///…/sp%20ace/x%20y.parquet`: the size must be
+    read at the unescaped path, so rewriting the file to another size
+    refuses the resume."""
+    src = tmp_path / "sp ace"
+    src.mkdir()
+    path = str(src / "x y.parquet")
+    pq.write_table(_typed_table(0, 400), path)
+    df = spark.read.parquet(str(src))
+    assert any("%20" in f for f in df.inputFiles())
+    root = str(tmp_path / "enc")
+    write_encoded(encode_chunks_scan(df, rows_per_chunk=100), root,
+                  mode="overwrite")
+    pq.write_table(_typed_table(0, 520), path)
+    df = spark.read.parquet(str(src))
+    with pytest.raises(ValueError, match="resume refused"):
+        encode_chunks_scan(df, rows_per_chunk=100,
+                           done_footer=tables.resume_footer(spark, root))
+
+
+def test_spark_written_int96_timestamps_take_the_direct_read(
+        spark, monkeypatch, tmp_path):
+    """`df.write.parquet` stores `timestamp` as INT96: read in µs, the
+    direct read equals Spark's (instants before and after 1970, NULLs,
+    a non-UTC session).  `int96TimestampConversion` and INT96 from
+    other writers keep the Spark path."""
+    src = str(tmp_path / "in")
+    with confs(spark, {"spark.sql.session.timeZone": "America/New_York"}):
+        spark.createDataFrame(
+            [(k, None if k % 9 == 0 else
+              dt.datetime(1901, 3, 1) + dt.timedelta(days=97 * k,
+                                                     microseconds=k))
+             for k in range(900)], "k long, t timestamp") \
+            .coalesce(2).write.parquet(src)
+        files = [os.path.join(src, f) for f in os.listdir(src)
+                 if f.endswith(".parquet")]
+        assert {pq.ParquetFile(f).schema.column(1).physical_type
+                for f in files} == {"INT96"}
+        df = spark.read.parquet(src)
+        splits, schema = direct_read_splits(df)
+        assert schema.field("t").type == pa.timestamp(
+            "us", tz="America/New_York")
+        rows = _both(spark, monkeypatch, tmp_path, df, 128)
+        assert sum(r[7] for r in rows if r[2] == "t") == 900
+        for key, value in (
+                ("spark.sql.parquet.int96TimestampConversion", "true"),
+                ("spark.sql.parquet.int96RebaseModeInRead", "LEGACY")):
+            with confs(spark, {key: value}):
+                # the file's Spark version decides the rebase, not the
+                # mode; the conversion always refuses
+                got = direct_read_splits(spark.read.parquet(src))
+                assert (got is None) == (key.endswith("Conversion"))
+        # another writer's INT96 (no Spark version) keeps Spark's reader
+        bare = str(tmp_path / "bare.parquet")
+        pq.write_table(pq.read_table(files[0]).replace_schema_metadata(),
+                       bare, use_deprecated_int96_timestamps=True)
+        for mode in ("CORRECTED", "LEGACY"):
+            with confs(spark, {
+                    "spark.sql.parquet.int96RebaseModeInRead": mode}):
+                assert direct_read_splits(spark.read.parquet(bare)) is None
+
+
+# ---- direct-write sink ----------------------------------------------
+
+def _direct_store(spark, src, root, mode="overwrite", rows_per_chunk=100):
+    chunks = encode_chunks_scan(spark.read.parquet(src),
+                                rows_per_chunk=rows_per_chunk)
+    assert tables._direct_target(chunks, root, mode) is not None
+    write_encoded(chunks, root, mode=mode)
+
+
+def _spark_store(spark, monkeypatch, src, root, mode="overwrite",
+                 rows_per_chunk=100):
+    with monkeypatch.context() as m:
+        _spark_path(m)
+        write_encoded(encode_chunks_scan(spark.read.parquet(src),
+                                         rows_per_chunk=rows_per_chunk),
+                      root, mode=mode)
+
+
+def _stored(spark, root) -> list:
+    return _chunk_rows(read_chunks(spark, root).select(*ROW_FIELDS))
+
+
+@pytest.mark.parametrize("first", ["spark", "direct"])
+def test_append_across_writers(spark, monkeypatch, tmp_path, first):
+    """Either writer appends onto a store the other wrote: it reads back
+    as one table of both writes' rows and verifies clean."""
+    from varint_rvv_spark.operators.decode import verify_roundtrip
+
+    a = _write_files(str(tmp_path / "a"), [300, 250])
+    b = str(tmp_path / "b")
+    os.makedirs(b)
+    pq.write_table(_typed_table(1000, 1450), os.path.join(b, "x.parquet"))
+    want = []
+    for src in (a, b):
+        _spark_store(spark, monkeypatch, src, str(tmp_path / "one"))
+        want += _stored(spark, str(tmp_path / "one"))
+    root = str(tmp_path / "store")
+    writers = {"spark": partial(_spark_store, spark, monkeypatch),
+               "direct": partial(_direct_store, spark)}
+    then = "direct" if first == "spark" else "spark"
+    writers[first](a, root)
+    writers[then](b, root, mode="append")
+    assert _stored(spark, root) == sorted(want)
+    assert verify_roundtrip(read_chunks(spark, root)) == (len(want), 0)
+
+
+def test_overwrite_replaces_an_older_store(spark, monkeypatch, tmp_path):
+    """A direct overwrite leaves only its own rows: the older store's
+    column directories, sidecars and rows are gone."""
+    old = _write_files(str(tmp_path / "old"), [500, 500])
+    new = str(tmp_path / "new")
+    os.makedirs(new)
+    pq.write_table(_typed_table(0, 333).select(["l", "s"]),
+                   os.path.join(new, "x.parquet"))
+    root = str(tmp_path / "store")
+    _spark_store(spark, monkeypatch, old, root)
+    _direct_store(spark, new, root)
+    _spark_store(spark, monkeypatch, new, str(tmp_path / "want"))
+    assert _stored(spark, root) == _stored(spark, str(tmp_path / "want"))
+    assert sorted(os.listdir(os.path.join(root, "chunks"))) == [
+        "_SUCCESS", "column=l", "column=s"]
+    assert _sidecars(root) == 0
+
+
+def test_empty_input_leaves_only_success(spark, tmp_path):
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    pq.write_table(_typed_table(1, 2).slice(0, 0),
+                   os.path.join(src, "x.parquet"))
+    root = str(tmp_path / "store")
+    _direct_store(spark, src, root)
+    assert os.listdir(os.path.join(root, "chunks")) == ["_SUCCESS"]
+    assert read_chunks(spark, root).count() == 0
+
+
+def _tap_read_splits(monkeypatch, seen):
+    """Count every input row the direct batch source reads."""
+    read_splits = encode._read_splits
+
+    def tapped(splits, schema, rows_per_chunk, kernel):
+        def counting(batches):
+            def tap():
+                for b in batches:
+                    seen.add(b.num_rows)
+                    yield b
+            return kernel(tap())
+        return read_splits(splits, schema, rows_per_chunk, counting)
+
+    monkeypatch.setattr(encode, "_read_splits", tapped)
+
+
+def test_direct_write_reads_input_once(spark, monkeypatch, tmp_path):
+    """Direct-write twin of test_write_encoded_reads_input_once: the
+    write job's tasks read every input row exactly once."""
+    src = _write_files(str(tmp_path / "in"), [600, 400])
+    seen = spark.sparkContext.accumulator(0)
+    _tap_read_splits(monkeypatch, seen)
+    root = str(tmp_path / "enc")
+    _direct_store(spark, src, root, rows_per_chunk=128)
+    assert seen.value == 1000
+    assert _sidecars(root) == 0
+
+
+def test_cached_frame_writes_its_cached_rows(spark, monkeypatch, tmp_path):
+    """A cached direct-read frame is written by Spark from its cache: no
+    input row is read again during the write."""
+    src = _write_files(str(tmp_path / "in"), [600, 400])
+    seen = spark.sparkContext.accumulator(0)
+    _tap_read_splits(monkeypatch, seen)
+    chunks = encode_chunks_scan(spark.read.parquet(src),
+                                rows_per_chunk=128).cache()
+    try:
+        assert chunks.count() > 0 and seen.value == 1000
+        root = str(tmp_path / "enc")
+        write_encoded(chunks, root, mode="overwrite")
+        assert seen.value == 1000
+        assert _sidecars(root) > 0
+    finally:
+        chunks.unpersist()
+    _spark_store(spark, monkeypatch, src, str(tmp_path / "want"),
+                 rows_per_chunk=128)
+    assert _stored(spark, root) == _stored(spark, str(tmp_path / "want"))
+
+
+def test_derived_frames_and_other_codecs_take_sparks_writer(spark,
+                                                           tmp_path):
+    src = _write_files(str(tmp_path / "in"), [300, 200])
+    chunks = encode_chunks_scan(spark.read.parquet(src), rows_per_chunk=64)
+    derived = chunks.filter(F.col("n_values") > 0)
+    root = str(tmp_path / "derived")
+    write_encoded(derived, root)
+    assert _sidecars(root) > 0
+    with confs(spark, {"spark.sql.parquet.compression.codec": "snappy"}):
+        root = str(tmp_path / "snappy")
+        write_encoded(chunks, root)
+        assert _sidecars(root) > 0
+        assert any(f.endswith(".snappy.parquet")
+                   for _, _, fs in os.walk(root) for f in fs)
+    assert tables._direct_target(chunks, str(tmp_path / "x"),
+                                 "errorifexists") is None
+    with confs(spark,
+               {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+        assert tables._direct_target(chunks, str(tmp_path / "x"),
+                                     "overwrite") is None
+    # column names Spark escapes in directory names
+    odd = str(tmp_path / "odd")
+    os.makedirs(odd)
+    pq.write_table(pa.table({"a=b": [1, 2, 3]}),
+                   os.path.join(odd, "x.parquet"))
+    assert tables._direct_target(
+        encode_chunks_scan(spark.read.parquet(odd)), odd, "append") is None
+
+
+def test_failed_write_job_leaves_the_store_unchanged(spark, monkeypatch,
+                                                     tmp_path):
+    """A task that raises inside the write job (after writing some of
+    its files): the store, its listing included, is as before, no
+    staging is left, and the next append succeeds."""
+    src = _write_files(str(tmp_path / "in"), [700])
+    root = str(tmp_path / "store")
+    _direct_store(spark, src, root)
+    before, rows = _listing(root), _stored(spark, root)
+    read_splits = encode._read_splits
+
+    def failing(splits, schema, rows_per_chunk, kernel):
+        def after_two(batches):
+            for i, out in enumerate(kernel(batches)):
+                if i == 2:
+                    raise RuntimeError("injected write-task failure")
+                yield out
+        return read_splits(splits, schema, rows_per_chunk, after_two)
+
+    with monkeypatch.context() as m:
+        m.setattr(encode, "_read_splits", failing)
+        m.setattr(tables, "ROWGROUP_BYTES", 1)  # files exist at the raise
+        with pytest.raises(Exception, match="injected write-task failure"):
+            _direct_store(spark, src, root, mode="append")
+    assert _listing(root) == before
+    assert _stored(spark, root) == rows
+    _direct_store(spark, src, root, mode="append")
+    assert _stored(spark, root) == sorted(rows + rows)
+
+
+def test_commit_renames_only_the_collected_attempts(spark, monkeypatch,
+                                                    tmp_path):
+    """Files another attempt of a task left in the job's staging
+    directory (a failed or superseded attempt) are never committed."""
+    src = _write_files(str(tmp_path / "in"), [500, 300])
+    root = str(tmp_path / "store")
+    staging_root = os.path.join(root, "chunks", "_temporary")
+    read_splits = encode._read_splits
+
+    def stray(splits, schema, rows_per_chunk, kernel):
+        def also_stale(batches):
+            out = list(kernel(batches))
+            job = os.listdir(staging_root)[0]
+            d = os.path.join(staging_root, job, "stale-attempt",
+                             "column=l")
+            os.makedirs(d, exist_ok=True)
+            rows = pa.Table.from_batches(out)
+            rows = rows.filter(pc.equal(rows["column"], "l"))
+            pq.write_table(rows.drop_columns(["column"]),
+                           os.path.join(d, f"part-{len(os.listdir(d))}"
+                                           f".c000.zstd.parquet"))
+            yield from out
+        return read_splits(splits, schema, rows_per_chunk, also_stale)
+
+    with monkeypatch.context() as m:
+        m.setattr(encode, "_read_splits", stray)
+        _direct_store(spark, src, root)
+    _spark_store(spark, monkeypatch, src, str(tmp_path / "want"))
+    assert _stored(spark, root) == _stored(spark, str(tmp_path / "want"))
+    assert not os.path.exists(staging_root)
+
+
+def test_direct_written_store_resumes(spark, monkeypatch, tmp_path):
+    """A direct-written store that lost a task's files resumes through
+    resume_footer + done_footer to the full store's rows."""
+    src = _write_files(str(tmp_path / "in"), [400, 300, 350])
+    root = str(tmp_path / "store")
+    _direct_store(spark, src, root)
+    full = _stored(spark, root)
+    for d, _, fs in os.walk(os.path.join(root, "chunks")):
+        for f in fs:
+            if f.startswith("part-00001-"):
+                os.remove(os.path.join(d, f))
+    assert len(_stored(spark, root)) < len(full)
+    footer = tables.resume_footer(spark, root)
+    rest = encode_chunks_scan(spark.read.parquet(src), rows_per_chunk=100,
+                              done_footer=footer)
+    write_encoded(rest, root)
+    assert _stored(spark, root) == full
+
+
+def test_direct_store_pushes_chunk_id_filters(spark, tmp_path):
+    """The Spark-path lookup over a direct-written store still pushes
+    `chunk_id` to the parquet scan, whose files carry its statistics
+    (and none for payloads)."""
+    import re
+
+    from varint_rvv_spark.operators.decode import scan_encoded
+
+    src = _write_files(str(tmp_path / "in"), [400, 400])
+    root = str(tmp_path / "store")
+    _direct_store(spark, src, root)
+    derived = read_chunks(spark, root).select("*")
+    d = scan_encoded(derived, ["l", "s"], "l long, s string",
+                     eq={"l": 123 * 123})
+    assert re.search(r"PushedFilters: \[[^\]]*(In|EqualTo)\(chunk_id",
+                     plan_of(d)), plan_of(d)
+    assert [(r.l, r.s) for r in d.collect()] == [(123 * 123, "s12-123")]
+    f = pq.ParquetFile(next(
+        os.path.join(dp, x) for dp, _, fs in os.walk(root) for x in fs
+        if x.endswith(".parquet")))
+    names = f.schema_arrow.names
+    group = f.metadata.row_group(0)
+    assert group.column(names.index("chunk_id")).statistics.has_min_max
+    assert group.column(names.index("payload")).statistics is None

@@ -26,6 +26,7 @@ JVM⟷Python Arrow crossing per partition stream.
 from __future__ import annotations
 
 import json
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -369,12 +370,16 @@ def scan_layout_fingerprint(df: DataFrame,
     files = sorted(df.inputFiles())
     if not files:
         return None
+    from ..sources.tables import _local_path
+
     parts = []
     for f in files:
-        p = f.removeprefix("file:")
+        # the URI is hashed as listed; its size is read at the unescaped
+        # path (`file:///a%20b` names "/a b")
+        p = _local_path(f)
         try:
-            sz = os.path.getsize(p)
-        except OSError:  # non-local FS: path-only (still catches set
+            sz = os.path.getsize(p) if p is not None else -1
+        except OSError:  # not local: path-only (still catches set
             sz = -1      # membership and ordering changes)
         parts.append(f"{f}:{sz}")
     conf = df.sparkSession.conf
@@ -421,7 +426,12 @@ def encode_chunks_scan(df: DataFrame, columns: list[str] | None = None,
     file count and `scan_layout_fingerprint` are those of the Spark
     path, so a store written by either path resumes under the other.
     The splits are fixed when this is called (the fingerprint is too).
-    Any other input, and any resume, reads through Spark.
+    Any other input, and any resume, reads through Spark.  The frame is
+    tagged with its batch source (`DirectEncode`): `write_encoded` of
+    the untransformed, unpersisted frame runs that source in its own
+    write tasks, which write the store files with pyarrow (parquet page
+    CRCs, no Hadoop `.crc` sidecars), so chunk rows do not cross back
+    into the JVM either.
 
     Resume: pass the previous run's footer as `done_footer` — finished
     chunks are skipped with the SAME broadcast left_anti join hash mode
@@ -454,10 +464,14 @@ def encode_chunks_scan(df: DataFrame, columns: list[str] | None = None,
         direct = direct_read_splits(projected)
         if direct is not None:
             splits, schema = direct
-            return df.sparkSession.range(
+            source = _read_splits(splits, schema, rows_per_chunk, kernel)
+            chunks = df.sparkSession.range(
                 0, len(splits), 1, len(splits)).mapInArrow(
-                _read_splits(splits, schema, rows_per_chunk, kernel),
-                CHUNK_SPARK_SCHEMA)
+                source, CHUNK_SPARK_SCHEMA)
+            # write_encoded runs `source` in its own write tasks
+            chunks._chunk_source = DirectEncode(len(splits), source,
+                                                columns)
+            return chunks
     if done_footer is not None:
         if done_chunk_ids is not None:
             raise ValueError("pass done_footer or done_chunk_ids, "
@@ -494,6 +508,16 @@ def encode_chunks_scan(df: DataFrame, columns: list[str] | None = None,
     return keyed.mapInArrow(kernel, CHUNK_SPARK_SCHEMA)
 
 
+class DirectEncode(NamedTuple):
+    """Tag of a direct-read `encode_chunks_scan` frame: its batch
+    source, a mapInArrow function over `range(0, n, 1, n)` that yields
+    the frame's chunk rows, and the encoded `columns` (the values of
+    the chunks' `column` field)."""
+    n: int
+    source: Callable
+    columns: list
+
+
 def _read_splits(splits: list, schema: pa.Schema, rows_per_chunk: int,
                  kernel):
     """Direct-read batch source in front of `kernel`, for a mapInArrow
@@ -506,7 +530,10 @@ def _read_splits(splits: list, schema: pa.Schema, rows_per_chunk: int,
 
         row = 0
         for path in paths:
-            with pq.ParquetFile(path) as f:
+            # INT96 (which direct_read_splits admits only as Spark
+            # reads it, unrebased) in µs as Spark truncates it
+            with pq.ParquetFile(path,
+                                coerce_int96_timestamp_unit="us") as f:
                 for b in f.iter_batches(columns=schema.names):
                     if not b.num_rows:
                         continue

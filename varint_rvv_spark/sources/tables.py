@@ -8,6 +8,15 @@ The same projection is the checkpoint ledger: `resume_footer` loads it
 (no chunk files yet → None) and encode passes it to skip finished chunks.
 A store whose writes held no rows reads as an empty chunks table.
 
+Two writers make the same layout (`write_encoded`): Spark's parquet
+writer, and for the untransformed frame of a direct-read scan encode a
+direct write, whose Python tasks encode their split and write the
+files with pyarrow into `<root>/chunks/_temporary/<job>/`, and whose
+driver then renames the files of the one successful attempt per task
+into place.  Direct-written files carry parquet page CRCs but no
+Hadoop `.crc` sidecars; either writer appends to, resumes and reads
+the other's store.
+
 A `read_chunks` frame of the whole store is tagged with its root; while
 its data files are local, `local_files` + `read_local` give the driver
 pyarrow reads of exactly the files the frame lists (the lookup path of
@@ -23,6 +32,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
@@ -66,14 +77,188 @@ from ..operators.encode import (
 ROWGROUP_BYTES = 16 << 20
 
 
+# the direct write's parquet options: parquet-mr's zstd level, plain
+# encoding (dictionaries and min/max of payloads, hashes and stats_json
+# only grew the files), statistics on the short fields (chunk_id's keep
+# `chunk_id IN` row-group skipping), page CRCs as parquet-mr writes them
+_WRITE_OPTIONS = dict(
+    compression="zstd", compression_level=3, use_dictionary=False,
+    write_statistics=["chunk_id", "num_chunks", "codec_id", "codec",
+                      "dtype_code", "logical_type", "n_values",
+                      "raw_bytes", "encoded_bytes"],
+    write_page_checksum=True, store_schema=False)
+# a stored file's fields: the chunk schema without the partition key
+_FILE_SCHEMA = CHUNK_ARROW_SCHEMA.remove(
+    CHUNK_ARROW_SCHEMA.get_field_index("column"))
+
+
 def write_encoded(chunks: DataFrame, root: str,
                   mode: str = "append") -> None:
-    """Persist chunks as one column-partitioned parquet write: the
-    input's encode lineage runs once."""
+    """Persist chunks as one column-partitioned parquet table,
+    `<root>/chunks/column=<name>/part-*.zstd.parquet`: the input's
+    encode lineage runs once.
+
+    The untransformed, unpersisted frame of a direct-read
+    `encode_chunks_scan` (tagged with its batch source) is written
+    directly when `root` is on the local filesystem, `mode` is append
+    or overwrite (the latter under static partition overwrite), the
+    session's parquet codec is zstd and every encoded column name is
+    its own hive directory name: one job whose Python tasks encode
+    their split and write one file per column with pyarrow into a
+    staging directory, then a driver-side commit (`_write_direct`).
+    Its files carry parquet page CRCs but no Hadoop `.crc` sidecars.
+    Every other frame (derived, cached, in-session, resumed) and root
+    goes through Spark's parquet writer; a cached frame writes its
+    cached rows and does not encode again.
+    """
+    target = _direct_target(chunks, root, mode)
+    if target is not None:
+        _write_direct(chunks.sparkSession, vars(chunks)["_chunk_source"],
+                      target, mode)
+        return
     (chunks.write.mode(mode)
      .option("parquet.block.size", str(ROWGROUP_BYTES))
      .partitionBy("column")
      .parquet(f"{root}/chunks"))
+
+
+def _direct_target(chunks: DataFrame, root: str, mode: str) -> str | None:
+    """The local path of `<root>/chunks` when `write_encoded` may write
+    `chunks` directly, else None."""
+    tag = vars(chunks).get("_chunk_source")
+    if tag is None or mode not in ("append", "overwrite"):
+        return None
+    # .cache() tags nothing new: it returns the same frame
+    level = chunks.storageLevel
+    if level.useMemory or level.useDisk or level.useOffHeap:
+        return None
+    spark = chunks.sparkSession
+    conf = spark.conf
+    if (conf.get("spark.sql.parquet.compression.codec").lower() != "zstd"
+            or mode == "overwrite" and conf.get(
+                "spark.sql.sources.partitionOverwriteMode").lower()
+            != "static"):
+        return None
+    try:
+        # the directory Spark's writer would write, as Hadoop resolves
+        # `root` (default filesystem, working directory)
+        path = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/chunks")
+        fs = path.getFileSystem(
+            spark._jsparkSession.sessionState().newHadoopConf())
+        if fs.getScheme() != "file":
+            return None
+        escape = spark._jvm.org.apache.spark.sql.catalyst.catalog \
+            .ExternalCatalogUtils
+        if any(escape.getPartitionPathString("column", c)
+               != f"column={c}" for c in tag.columns):
+            return None
+        return fs.makeQualified(path).toUri().getPath()
+    except Py4JError:  # a Spark build whose classes differ
+        return None
+
+
+def _write_direct(spark: SparkSession, tag, target: str,
+                  mode: str) -> None:
+    """Write a direct-read encode's chunks into `target` (`<root>/chunks`)
+    with one job, then commit.
+
+    Task i of `range(0, n, 1, n)` writes under
+    `<target>/_temporary/<job>/<task attempt>/` (`_write_task`) and
+    yields the paths it wrote.  The collected paths are those of the
+    one successful attempt per partition; the driver then (overwrite
+    only) removes everything under `target` but `_temporary`, renames
+    each collected file into `column=<c>/`, removes its staging
+    directory and writes `_SUCCESS`.  If the job fails, it removes its
+    staging directory and re-raises, leaving the store unchanged.
+    """
+    job = str(uuid.uuid4())
+    staging = os.path.join(target, "_temporary", job)
+    os.makedirs(staging)
+    try:
+        written = [r.path for r in spark.range(0, tag.n, 1, tag.n)
+                   .mapInArrow(_write_task(tag.source, staging, job),
+                               "path string").collect()]
+    except BaseException:
+        _drop_staging(staging)
+        raise
+    if mode == "overwrite":
+        for name in os.listdir(target):
+            if name == "_temporary":
+                continue
+            old = os.path.join(target, name)
+            if os.path.isdir(old) and not os.path.islink(old):
+                shutil.rmtree(old)
+            else:
+                os.remove(old)
+    for rel in written:
+        _, part, name = rel.split("/")
+        os.makedirs(os.path.join(target, part), exist_ok=True)
+        os.rename(os.path.join(staging, rel),
+                  os.path.join(target, part, name))
+    _drop_staging(staging)
+    open(os.path.join(target, "_SUCCESS"), "wb").close()
+
+
+def _drop_staging(staging: str) -> None:
+    shutil.rmtree(staging, ignore_errors=True)
+    try:
+        os.rmdir(os.path.dirname(staging))   # `_temporary`, if now empty
+    except OSError:
+        pass
+
+
+def _write_task(source, staging: str, job: str):
+    """mapInArrow function of the direct write: runs `source` (the
+    encode's batch source) in this task and writes its chunk rows,
+    split by `column`, into one parquet file per column,
+    `<staging>/<attempt>/column=<c>/part-<partition>-<job>.c000.zstd.parquet`,
+    a row group each time the task has buffered `ROWGROUP_BYTES`;
+    yields the paths written, relative to `staging`."""
+    def fn(batch_iter):
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        attempt = str(ctx.taskAttemptId())
+        name = f"part-{ctx.partitionId():05d}-{job}.c000.zstd.parquet"
+        # mkdir, not makedirs: once an aborted job's staging directory
+        # is gone, a task still running creates nothing
+        os.mkdir(os.path.join(staging, attempt))
+        buffered, writers = {}, {}
+        size = 0
+
+        def flush():
+            for c, batches in buffered.items():
+                if c not in writers:
+                    rel = f"{attempt}/column={c}/{name}"
+                    os.mkdir(os.path.join(staging, attempt, f"column={c}"))
+                    writers[c] = rel, pq.ParquetWriter(
+                        os.path.join(staging, rel), _FILE_SCHEMA,
+                        **_WRITE_OPTIONS)
+                rows = pa.Table.from_batches(batches, _FILE_SCHEMA)
+                writers[c][1].write_table(rows, row_group_size=rows.num_rows)
+            buffered.clear()
+
+        try:
+            for batch in source(batch_iter):
+                stored = batch.select(_FILE_SCHEMA.names)
+                names = batch.column("column").to_pylist()
+                for c in dict.fromkeys(names):
+                    buffered.setdefault(c, []).append(stored.take(
+                        [i for i, n in enumerate(names) if n == c]))
+                size += batch.nbytes
+                if size >= ROWGROUP_BYTES:
+                    flush()
+                    size = 0
+            flush()
+        finally:
+            for _, w in writers.values():
+                w.close()
+        yield pa.RecordBatch.from_pydict(
+            {"path": [rel for rel, _ in writers.values()]},
+            schema=pa.schema([("path", pa.string())]))
+
+    return fn
 
 
 def read_chunks(spark: SparkSession, root: str,
@@ -236,7 +421,12 @@ def direct_read_splits(df: DataFrame) -> tuple[list, pa.Schema] | None:
     Spark would also read the files as stored: no corrupt- or
     missing-file skipping, large var types off, and no calendar rebase
     of dates or timestamps (a legacy-marked file, or a file without a
-    Spark version under a rebase mode other than CORRECTED).
+    Spark version under a rebase mode other than CORRECTED).  An INT96
+    column (Spark's default timestamp encoding) is read in µs, as
+    Spark truncates it, only from a file Spark 3.1 or later wrote
+    without a legacy mark (which Spark reads unrebased whatever
+    `int96RebaseModeInRead` says) and never under
+    `int96TimestampConversion`.
     """
     import pyarrow.parquet as pq
 
@@ -280,19 +470,37 @@ def direct_read_splits(df: DataFrame) -> tuple[list, pa.Schema] | None:
     temporal = any(pa.types.is_timestamp(t) or pa.types.is_date(t)
                    for t in schema.types)
     rebase = conf.get("spark.sql.parquet.datetimeRebaseModeInRead")
+    int96_shift = conf.get(
+        "spark.sql.parquet.int96TimestampConversion").lower() == "true"
     for path in {p for paths in splits for p in paths}:
-        stored = pq.read_schema(path)
-        meta = stored.metadata or {}
+        # INT96 read in µs, as `_read_splits` reads it
+        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as f:
+            stored, meta = f.schema_arrow, f.metadata.metadata or {}
+            int96 = {f.schema.column(j).path for j in range(len(f.schema))
+                     if f.schema.column(j).physical_type == "INT96"}
         version = meta.get(_SPARK_VERSION)
-        if version is None:   # Spark takes the rebase mode from the conf
-            legacy = rebase != "CORRECTED"
-        else:
-            legacy = version < b"3" or any(k in meta for k in _LEGACY_KEYS)
-        if temporal and legacy:
+        legacy = any(k in meta for k in _LEGACY_KEYS)
+        # without a Spark version, Spark takes the rebase mode from the
+        # conf
+        if temporal and (rebase != "CORRECTED" if version is None
+                         else legacy or version < b"3"):
             return None
         for want in schema:
             i = stored.get_field_index(want.name)  # -1: absent or twice
-            if i < 0 or not _casts_exactly(stored.field(i).type, want.type):
+            if i < 0:
+                return None
+            if want.name in int96:
+                # Spark's UTC instants, read as TimestampType, unshifted
+                # and unrebased (Spark before 3.1 wrote INT96 in the
+                # hybrid calendar); other writers' INT96 (Impala's local
+                # times, which int96TimestampConversion shifts) keep
+                # Spark's reader
+                if (int96_shift or version is None or legacy
+                        or version < b"3.1.0"
+                        or not pa.types.is_timestamp(want.type)
+                        or want.type.tz is None):
+                    return None
+            elif not _casts_exactly(stored.field(i).type, want.type):
                 return None
     return splits, schema
 
